@@ -46,6 +46,7 @@ from .fixpoint import (
     fixpoint_mixed,
     fixpoint_monotonic,
     fixpoint_seminaive,
+    release_checkpoint_blocks,
 )
 from .local_eval import (
     _static_pd,
@@ -252,8 +253,6 @@ class BigDatalogContext:
         caller still holds stops being re-executable after release
         (localCheckpoint blocks are not recomputable); that matches the
         documented memo contract: results are valid while memoized."""
-        from .fixpoint import release_checkpoint_blocks
-
         release_checkpoint_blocks(self._bound_memo.values())
         self._bound_memo.clear()
 
@@ -312,6 +311,13 @@ class BigDatalogContext:
         self.register(name, df)
 
     def reset(self) -> None:
+        """Drop the program, relations and memoized results, releasing what
+        the context owns (result checkpoint blocks, persisted statics,
+        local-eval broadcasts): frames query() returned before a reset stop
+        being re-executable. Registered relations' blocks are the caller's."""
+        release_checkpoint_blocks(
+            self._cache.values(), keep=self._relations.values()
+        )
         self.program = Program()
         self._relations.clear()
         self._cache.clear()
@@ -819,8 +825,6 @@ class BigDatalogContext:
             # timing, so the cap bounded the dict but not storage
             # (ADVICE r09; the r3 broadcast-destroy lesson applied here).
             if len(self._bound_memo) >= 64:
-                from .fixpoint import release_checkpoint_blocks
-
                 evicted = self._bound_memo.pop(next(iter(self._bound_memo)))
                 # magic-path results are ALSO served from _cache under
                 # their guarded name — releasing those here would free
@@ -1521,9 +1525,9 @@ class BigDatalogContext:
                 # Pre-materialization garbage stats (RDD-backed registers
                 # report Long.MaxValue): bounded probe once, memoized. The
                 # hint must AGREE with _make_static_shuffle's probe-based
-                # decision — the loop scope turns auto-broadcast off, so an
-                # unhinted broadcastable static would degrade to an
-                # UN-pre-shuffled sort-merge join re-exchanging the
+                # decision — auto-broadcast (ON in the loop, see _aqe_off)
+                # cannot size such a static, so unhinted it would degrade
+                # to an UN-pre-shuffled sort-merge join re-exchanging the
                 # candidate chain every iteration (and breaking the pivot
                 # store's zero-exchange property).
                 est = self._estimated_bytes(df, self.config.broadcast_max_bytes)
@@ -1802,11 +1806,6 @@ class BigDatalogContext:
             statics[p] = df
         return statics
 
-    def _checkpointed(self, df: DataFrame) -> DataFrame:
-        if self.config.fixpoint.checkpoint:
-            return df.localCheckpoint(eager=False)
-        return df
-
     @property
     def _growth(self):
         return (
@@ -2009,7 +2008,7 @@ class BigDatalogContext:
                 # preds cache a thunk instead — _resolve_cached builds the
                 # frame on first real use, never for preds nobody reads
                 result[pred] = (
-                    lambda pred=pred: self._checkpointed(build(pred))
+                    lambda pred=pred: build(pred).localCheckpoint(eager=False)
                 )
         return result
 
@@ -2371,7 +2370,7 @@ class BigDatalogContext:
                 # deferred like the seminaive path: unqueried preds cache a
                 # thunk; _resolve_cached pays the planning pass only when a
                 # consumer actually reads the predicate
-                out[pred] = lambda pred=pred: self._checkpointed(build(pred))
+                out[pred] = lambda pred=pred: build(pred).localCheckpoint(eager=False)
         return out
 
     def _compute_seminaive_clique(
@@ -2474,7 +2473,7 @@ class BigDatalogContext:
             # accumulated-set occurrence joins each stored segment in place
             # (segments pre-partitioned+sorted on the join columns) instead
             # of re-exchanging all of S every iteration — per-iteration
-            # shuffle volume O(|Δ|), not O(|S|). Probes and the legacy loop
+            # shuffle volume O(|Δ|), not O(|S|). The loop's plan probes
             # pass plain dicts and take the view() path below.
             seg_join = getattr(all_dfs, "join_segments", None)
             cands: dict[str, DataFrame] = {}

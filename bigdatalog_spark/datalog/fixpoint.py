@@ -1,14 +1,18 @@
 """Semi-naive fixpoint executors — the engine's core.
 
 Re-creates the reference's recursion physical operators as idiomatic
-driver-side DataFrame loops (SURVEY.md §7.3/§7.4):
+driver-side DataFrame loops (SURVEY.md §7.3/§7.4). Two distributed PSN
+loops remain, one per semantics:
 
-* Recursion / MutualRecursion (execution/recursion/Recursion.scala:30-228,
-  MutualRecursion.scala:28-131): PSN loop `Δ' = T_R(Δ) − S; S = S ∪ Δ'`.
-* AggregateRecursion (AggregateRecursion.scala:26-178 +
-  AggregateSetRDDMinMaxPartition.scala:42-57): keyed mmin/mmax table;
-  per iteration aggregate the delta's contributions and keep only improved
-  groups as the next delta.
+* ``fixpoint_seminaive`` — Recursion / MutualRecursion
+  (execution/recursion/Recursion.scala:30-228, MutualRecursion.scala:28-131):
+  `Δ' = T_R(Δ) − S; S = S ∪ Δ'` with S held as co-partitioned sorted
+  segments (_SegmentedSet), so the difference merge-scans S in place.
+* ``fixpoint_mixed`` — AggregateRecursion (AggregateRecursion.scala:26-178 +
+  AggregateSetRDDMinMaxPartition.scala:42-57) and cliques mixing set and
+  aggregate predicates: keyed mmin/mmax/mcount/msum tables whose delta is
+  the improved groups of one fused keyed aggregate, beside union-based set
+  predicates. ``fixpoint_monotonic`` is a one-predicate wrapper over it.
 
 The reference's SetRDD diff and single-job fixpoint scheduler exist to make
 2016-Spark iteration fast; on modern Spark the equivalents are LEFT ANTI
@@ -21,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -31,19 +35,10 @@ from .semantics import DatalogSemanticError
 @dataclass
 class FixpointConfig:
     max_iterations: int = 100_000
-    # unpersist cached frames this many generations back
-    # (CachedRDDManager "iterationsBackToRemove=2", CachedRDDManager.scala:44)
-    generations_to_keep: int = 2
+    # storage level of the segmented set's null side store
     storage_level: StorageLevel = field(
         default_factory=lambda: StorageLevel.MEMORY_AND_DISK
     )
-    # localCheckpoint every iteration truncates lineage; without it plans
-    # grow unboundedly (reference README.md:32). checkpoint=False is a
-    # DEBUGGING mode: per-iteration results are correct (frames persist
-    # before their counts; generations are kept for the loop's lifetime),
-    # but every iteration's plan contains all prior plans, so analysis
-    # cost grows superlinearly with iteration count.
-    checkpoint: bool = True
     # deltas below this row count are narrowed to `small_partitions` so each
     # per-iteration job schedules a handful of tasks instead of one per
     # shuffle partition — the dominant cost of late, tiny iterations. The
@@ -58,22 +53,6 @@ class FixpointConfig:
     # set whenever it exceeds this cap (0 = 2× the session's shuffle
     # partitions, resolved lazily)
     max_set_partitions: int = 0
-    # Store the accumulated set S as sorted hash-partitioned segments
-    # (LSM-style) instead of one re-unioned frame. The per-iteration
-    # Δ' = cand − S then merge-scans stored blocks with NO shuffle or sort
-    # of S (the SetRDD partition-stable store, SetRDD.scala:111-126,
-    # re-expressed via localCheckpoint's preserved outputPartitioning) —
-    # per-iteration shuffle drops from O(|S|) to O(|Δ|). Requires
-    # checkpoint=True; AQE is disabled inside the loop because
-    # AdaptiveSparkPlanExec reports UnknownPartitioning at checkpoint
-    # capture, which would force S back through an Exchange each iteration.
-    # Serves non-linear steps too (they read `view()` of the segments):
-    # the step's join against the full set keys on rule variables — not
-    # the set key — so that join still exchanges S, but the per-iteration
-    # ANTI-join of the growing S (the superlinear part on non-linear
-    # closures) becomes an in-place merge-scan. Measured on sf1 non-linear
-    # TC (3.1M-row closure): 25s legacy → 21s segmented; par at sf0.1.
-    copartitioned_set: bool = True
     # compact the segment chain (union + one re-shuffle of S) when it grows
     # past this length: bounds plan depth and per-iteration merge fan-in,
     # amortizing the re-shuffle to |S|/max_segments per iteration
@@ -98,51 +77,7 @@ class FixpointConfig:
     # 8 MB seed-byte target leaves ~8-32x growth headroom inside the
     # usual 64-256 MB/task band for closures that outgrow their seed;
     # seeds with unknown stats (RDD-backed registers) keep the cap.
-    adaptive_loop_partitions: bool = True
     loop_partition_seed_bytes: int = 8 << 20
-
-
-class _GenerationCache:
-    """persist + unpersist-N-generations-back bookkeeping."""
-
-    def __init__(self, cfg: FixpointConfig):
-        self.cfg = cfg
-        self.generations: list[list[DataFrame]] = []
-
-    def persist(self, df: DataFrame) -> DataFrame:
-        df = df.persist(self.cfg.storage_level)
-        if not self.generations:
-            self.generations.append([])
-        self.generations[-1].append(df)
-        return df
-
-    def next_generation(self) -> None:
-        self.generations.append([])
-        # Without checkpointing there is NO lineage truncation: a predicate
-        # that converged at iteration k keeps its generation-k frame
-        # referenced in all_dfs for every later iteration, and unpersisting
-        # it would force full-lineage recomputation each round (quadratic,
-        # then StackOverflow — the exact failure the caching exists to
-        # prevent). Keep every generation; close() frees them at exit.
-        # With checkpointing the blocks outlive unpersist, so the N-back
-        # policy (CachedRDDManager.scala:44) is safe and bounds memory.
-        if not self.cfg.checkpoint:
-            return
-        if len(self.generations) > self.cfg.generations_to_keep + 1:
-            for df in self.generations.pop(0):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-
-    def close(self) -> None:
-        for gen in self.generations:
-            for df in gen:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        self.generations = []
 
 
 def _truncate_marked_ancestors(dfs) -> None:
@@ -167,23 +102,15 @@ def _truncate_marked_ancestors(dfs) -> None:
     )
 
 
-def _materialize(
-    df: DataFrame, cfg: FixpointConfig, cache: "_GenerationCache | None" = None
-) -> tuple[DataFrame, int]:
+def _materialize(df: DataFrame) -> tuple[DataFrame, int]:
     """Truncate lineage and return (df, row_count) forcing evaluation once.
 
-    The checkpoint is LAZY: the convergence-test count() is the action that
-    materializes the checkpoint blocks, so each delta costs one Spark job,
-    not checkpoint-job + count-job. Without checkpointing, the frame must
-    be marked persisted BEFORE the count — the count is the action that
-    populates the cache; counting first would compute every frame twice
-    (once uncached for the count, again to fill storage at the next
-    action)."""
-    if cfg.checkpoint:
-        df = df.localCheckpoint(eager=False)
-        return df, df.count()
-    if cache is not None:
-        df = cache.persist(df)
+    localCheckpoint every iteration truncates lineage; without it plans
+    grow unboundedly (reference README.md:32). The checkpoint is LAZY: the
+    convergence-test count() is the action that materializes the
+    checkpoint blocks, so each delta costs one Spark job, not
+    checkpoint-job + count-job."""
+    df = df.localCheckpoint(eager=False)
     return df, df.count()
 
 
@@ -204,7 +131,14 @@ def _count_and_nulls(df: DataFrame) -> tuple[int, int]:
     ONE stage (the width of the frame) instead of partial-agg → exchange →
     final-agg — a fixpoint pays this action every iteration, and the extra
     single-task stage plus the first() collect were pure per-iteration
-    fixed cost. agg() kept as fallback for any observe limitation.
+    fixed cost.
+
+    Retry invariant: observe() metrics are accumulators, and a retried
+    task re-adds its partition's contribution, so both counts can only
+    OVER-count, never under-count. A spurious n > 0 costs one extra
+    iteration whose delta is empty (the loop then stops); a spurious null
+    count only switches the predicate to the null-safe anti, which is
+    correct for null-free rows too. Neither changes the answer.
 
     NULL-bearing tuples are outside the DeAL data model (the reference's
     loader cannot produce them, SURVEY §1.2) but CAN arrive through
@@ -213,24 +147,15 @@ def _count_and_nulls(df: DataFrame) -> tuple[int, int]:
     without detection a re-derived null tuple re-enters the delta every
     time — duplicate rows in S (set semantics broken) and, for pass-through
     columns on cyclic graphs, a live-locked fixpoint."""
-    try:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        observed = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(_has_null_expr(df.columns).cast("int")).alias("__hn"),
-        )
-        observed.write.format("noop").mode("overwrite").save()
-        m = obs.get
-        return int(m["__n"]), int(m["__hn"] or 0)
-    except Exception:
-        row = df.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(_has_null_expr(df.columns).cast("int")).alias("__hn"),
-        ).first()
-        return int(row["__n"]), int(row["__hn"] or 0)
+    obs = Observation()
+    observed = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("__n"),
+        F.sum(_has_null_expr(df.columns).cast("int")).alias("__hn"),
+    )
+    observed.write.format("noop").mode("overwrite").save()
+    m = obs.get
+    return int(m["__n"]), int(m["__hn"] or 0)
 
 
 def _anti_null_safe(cand: DataFrame, s: DataFrame, cols) -> DataFrame:
@@ -248,34 +173,43 @@ def _anti_null_safe(cand: DataFrame, s: DataFrame, cols) -> DataFrame:
     return cd.join(sd, on=cond, how="left_anti").select(*cols)
 
 
-def _materialize_nd(
-    df: DataFrame, cfg: FixpointConfig, cache: "_GenerationCache | None"
-) -> tuple[DataFrame, int, bool]:
+def _materialize_nd(df: DataFrame) -> tuple[DataFrame, int, int]:
     """_materialize + null detection in the same single job."""
-    if cfg.checkpoint:
-        df = df.localCheckpoint(eager=False)
-    elif cache is not None:
-        df = cache.persist(df)
+    df = df.localCheckpoint(eager=False)
     n, hn = _count_and_nulls(df)
     return df, n, hn
 
 
-def _truncate(df: DataFrame, cfg: FixpointConfig) -> DataFrame:
+def _truncate(df: DataFrame) -> DataFrame:
     """Lineage truncation only — no count job (for the accumulated set,
     whose cardinality the loop never branches on). Lazy: materializes at
     its first downstream use; a final-iteration set that is returned
     untouched defers to the caller's first action."""
-    if cfg.checkpoint:
-        out = df.localCheckpoint(eager=False)
-        if hasattr(df, "_bdlog_parts"):
-            # localCheckpoint preserves partitioning; carry the tracked
-            # count so _union_capped never probes .rdd on the hot path
-            out._bdlog_parts = df._bdlog_parts
-        return out
-    return df
+    out = df.localCheckpoint(eager=False)
+    if hasattr(df, "_bdlog_parts"):
+        # localCheckpoint preserves partitioning; carry the tracked
+        # count so _union_capped never probes .rdd on the hot path
+        out._bdlog_parts = df._bdlog_parts
+    return out
 
 
-def release_checkpoint_blocks(frames) -> None:
+def _leaf_rdds(frames):
+    """The JVM RDDs at the LogicalRDD leaves of ``frames``' analyzed plans.
+    Best-effort: frames whose plan cannot be walked, and leaves without an
+    rdd() (LocalRelations: driver-tier results), yield nothing."""
+    for df in frames:
+        try:
+            leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        except Exception:
+            continue
+        for i in range(leaves.size()):
+            try:
+                yield leaves.apply(i).rdd()
+            except Exception:
+                pass
+
+
+def release_checkpoint_blocks(frames, keep=()) -> None:
     """Free localCheckpoint block storage for frames an iterative loop has
     finished with — the repo's ONE deliberate private-API reach-in,
     shared by the segmented set and the graph driver loops.
@@ -293,27 +227,23 @@ def release_checkpoint_blocks(frames) -> None:
     public call to release a checkpoint's blocks deterministically, and
     dropping references defers to ContextCleaner + JVM GC, which on a
     long loop strands an O(|S|) spilled copy per iteration for minutes.
-    The try/except keeps it strictly best-effort: correctness never
-    depends on the release (a failure only costs memory until the
-    ContextCleaner catches up), and it fails soft across Spark versions."""
-    for df in frames:
+
+    Walks to the LogicalRDD leaves: loop-internal frames ARE the
+    checkpointed node, but memoized results wrap them (monotonic: Project
+    over LogicalRDD; segmented set: Union of segment LogicalRDDs) and
+    releasing only the root would silently no-op on exactly the frames
+    the bound-memo eviction frees. Checkpoint truncation means a fixpoint
+    result's leaves are its own blocks; a frame whose plan also reads
+    caller-owned relations (a memoized non-recursive result) must name
+    them in ``keep``, whose leaves are never released. Strictly
+    best-effort: correctness never depends on the release (a failure only
+    costs memory until the ContextCleaner catches up), and it fails soft
+    across Spark versions."""
+    kept = {rdd.id() for rdd in _leaf_rdds(keep)}
+    for rdd in _leaf_rdds(frames):
         try:
-            plan = df._jdf.queryExecution().analyzed()
-            # walk to the LogicalRDD leaves: loop-internal frames ARE the
-            # checkpointed node, but memoized results wrap them (monotonic:
-            # Project over LogicalRDD; segmented set: Union of segment
-            # LogicalRDDs) and releasing only the root would silently
-            # no-op on exactly the frames the bound-memo eviction frees.
-            # Checkpoint truncation means the leaves are the result's own
-            # blocks, never a shared static's. LocalRelation leaves
-            # (driver-tier results) have no rdd() — the inner except
-            # keeps those a no-op.
-            leaves = plan.collectLeaves()
-            for i in range(leaves.size()):
-                try:
-                    leaves.apply(i).rdd().unpersist(False)
-                except Exception:
-                    pass
+            if rdd.id() not in kept:
+                rdd.unpersist(False)
         except Exception:
             pass  # best-effort: a failed release only costs memory
 
@@ -339,20 +269,6 @@ def _narrow_small(df: DataFrame, n: int, cfg: FixpointConfig) -> DataFrame:
     if 0 < n <= cfg.small_delta_rows:
         return df.coalesce(cfg.small_partitions)
     return df
-
-
-def _retain(df: DataFrame, cfg: FixpointConfig, cache: "_GenerationCache") -> DataFrame:
-    """Keep an iteration frame hot for reuse.
-
-    When checkpointing, localCheckpoint has ALREADY stored the blocks — a
-    further persist() would register a second InMemoryRelation copy of the
-    same data (2× memory + an extra copy pass per iteration). Old checkpoint
-    blocks are freed by the ContextCleaner once the loop drops its
-    references. Without checkpointing, fall back to explicit
-    persist/unpersist generations (CachedRDDManager.scala:26-107)."""
-    if cfg.checkpoint:
-        return df
-    return cache.persist(df)
 
 
 class _aqe_off:
@@ -398,7 +314,7 @@ class _aqe_off:
         self._confs = dict(self._CONFS)
         if shuffle_partitions is not None:
             # loop-scoped data-sized exchange width (see FixpointConfig
-            # .adaptive_loop_partitions); restored with the AQE flags
+            # .loop_partition_seed_bytes); restored with the AQE flags
             self._confs["spark.sql.shuffle.partitions"] = str(
                 shuffle_partitions
             )
@@ -426,15 +342,13 @@ def _loop_partitions(spark, exit_dfs: dict, cfg: FixpointConfig) -> int | None:
     """Exchange width for one segmented fixpoint, sized from the seeds'
     Catalyst byte estimates (driver-side plan stats only — no job).
 
-    Returns None (= keep the session width) when adaptation is off, when
-    any seed's stats are unknown/garbage (RDD-backed relations report
-    Long.MaxValue), or when the computed width reaches the session cap
-    anyway. Production-scale seeds land on the cap, so this only narrows
-    loops whose data is far below one task's working size — where
+    Returns None (= keep the session width) when any seed's stats are
+    unknown/garbage (RDD-backed relations report Long.MaxValue), or when
+    the computed width reaches the session cap anyway. Production-scale
+    seeds land on the cap, so this only narrows loops whose data is far
+    below one task's working size — where
     session-width stages are pure per-iteration fixed cost (task launch +
     one shuffle/checkpoint file per task per stage)."""
-    if not cfg.adaptive_loop_partitions:
-        return None
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     total = 0
     for df in exit_dfs.values():
@@ -680,10 +594,11 @@ class _SegmentedSet:
         # partitioning even when both parents are partitioned, so sealing
         # it as-is would store an UNPARTITIONED segment and every later
         # iteration's merge-scan anti would re-exchange that whole segment
-        # in place of reading it (O(|segment|) per iteration, masked at
-        # small scale by auto-broadcast — which the loop scope now turns
-        # off). One O(|Δ|) exchange at seal time is the cheaper side of
-        # that trade everywhere. unionByName, not positional union:
+        # in place of reading it (O(|segment|) per iteration; masked at
+        # small scale only while auto-broadcast — which stays ON in the
+        # loop scope, see the _aqe_off NOTE — serves that anti). One
+        # O(|Δ|) exchange at seal time is the cheaper side of that trade
+        # everywhere. unionByName, not positional union:
         # _anti_null_safe re-selects in self.cols order but nn rides
         # cand's order — by-name is robust to either.
         return nn.unionByName(nul).repartition(
@@ -817,119 +732,6 @@ def _cast_like(df: DataFrame, target: DataFrame) -> DataFrame:
     return df.select(*casts) if changed else df
 
 
-def fixpoint_seminaive(
-    exit_dfs: dict,
-    step,
-    cfg: FixpointConfig | None = None,
-    pivot_cols: dict | None = None,
-) -> dict:
-    """Parallel semi-naive fixpoint over one or more mutually-recursive
-    predicates.
-
-    exit_dfs: pred -> seed DataFrame (already distinct / canonical columns).
-    step(all_dfs, delta_dfs) -> pred -> candidate DataFrame of newly
-        derivable tuples (may contain already-known rows; this function
-        anti-joins them away — SetRDD.diff semantics, SetRDD.scala:111-126).
-
-    Returns pred -> fixpoint DataFrame.
-    """
-    cfg = cfg or FixpointConfig()
-    _truncate_marked_ancestors(exit_dfs)
-    probe = None
-    if cfg.copartitioned_set and cfg.checkpoint:
-        probe = _step_probe(exit_dfs, step)
-        if probe is not None:
-            # non-linear steps are served too: the segmented loop hands the
-            # step `view()` frames for the accumulated sets, the same S∪Δ
-            # the legacy loop provides — and S is never re-shuffled for the
-            # anti-join (segments merge-join in place), which on non-linear
-            # closures (S grows superlinearly) is the dominant
-            # per-iteration Exchange the legacy loop pays
-            return _fixpoint_seminaive_segmented(
-                exit_dfs, step, cfg, pivot_cols, probe=probe
-            )
-    cache = _GenerationCache(cfg)
-
-    # schema probe: the candidate plans from the gate probe when it ran,
-    # else built once here; used to widen seeds so unions/anti-joins are
-    # type-stable
-    if probe is None:
-        probe = step(exit_dfs, exit_dfs)
-
-    all_dfs: dict[str, DataFrame] = {}
-    delta_dfs: dict[str, DataFrame] = {}
-    live = set()
-    null_preds: set[str] = set()  # preds whose set holds a null-bearing row
-    for pred, df in exit_dfs.items():
-        df = _widen_seed(df, probe.get(pred))
-        df, n, hn = _materialize_nd(df.distinct(), cfg, cache)
-        if hn:
-            null_preds.add(pred)
-        all_dfs[pred] = df
-        delta_dfs[pred] = df
-        if n:
-            live.add(pred)
-
-    iteration = 0
-    while live:
-        iteration += 1
-        if iteration > cfg.max_iterations:
-            raise RuntimeError(
-                f"fixpoint did not converge within {cfg.max_iterations} iterations"
-            )
-        cache.next_generation()
-        candidates = step(all_dfs, delta_dfs)
-        live = set()
-        new_all: dict[str, DataFrame] = dict(all_dfs)
-        new_delta: dict[str, DataFrame] = {}
-        for pred, cand in candidates.items():
-            if cand is None:
-                new_delta[pred] = _empty_like(all_dfs[pred])
-                continue
-            # Δ' = T_R(Δ) − S  (partition-local hash diff in the reference;
-            # LEFT ANTI join lets Catalyst/AQE pick the physical strategy)
-            cand = _cast_like(cand, all_dfs[pred])
-            if _plan_is_empty(cand):
-                new_delta[pred] = _empty_like(all_dfs[pred])
-                continue
-            if pred in null_preds:
-                delta = _anti_null_safe(
-                    cand.distinct(), all_dfs[pred], list(cand.columns)
-                )
-            else:
-                delta = cand.distinct().join(
-                    all_dfs[pred], on=list(cand.columns), how="left_anti"
-                )
-            delta, n, hn = _materialize_nd(delta, cfg, cache)
-            if hn:
-                null_preds.add(pred)
-            delta = _narrow_small(delta, n, cfg)
-            new_delta[pred] = delta
-            if n:
-                live.add(pred)
-                grown = _truncate(_union_capped(all_dfs[pred], delta, cfg), cfg)
-                new_all[pred] = _retain(grown, cfg, cache)
-        for pred in all_dfs:
-            new_delta.setdefault(pred, _empty_like(all_dfs[pred]))
-        all_dfs = new_all
-        delta_dfs = new_delta
-
-    # results stay persisted for downstream strata; caller may unpersist
-    return all_dfs
-
-
-def _step_probe(exit_dfs: dict, step) -> dict | None:
-    """The step planned once against plain seed dicts (plan construction
-    only, no job runs) — None when it throws, which routes to the legacy
-    loop, whose per-pred frames the step may be depending on. The probe
-    result doubles as the schema probe, so each fixpoint builds the full
-    candidate plan tree once here instead of once per consumer."""
-    try:
-        return step(dict(exit_dfs), dict(exit_dfs))
-    except Exception:
-        return None
-
-
 def _plan_partitioned_on(df: DataFrame, cols, n: int) -> bool:
     """True iff the frame's PHYSICAL plan reports hashpartitioning on
     exactly ``cols`` with ``n`` partitions. Driver-side planning only (no
@@ -953,7 +755,7 @@ def _plan_partitioned_on(df: DataFrame, cols, n: int) -> bool:
 class _SegmentViews(dict):
     """The ``all_dfs`` mapping the segmented loop hands to step().
 
-    As a dict it is pred -> S.view() (what every legacy step reads). A
+    As a dict it is pred -> S.view() (what a plain step reads). A
     cooperating step (context._compute_seminaive_clique) may additionally
     call ``join_segments(pred, cols)`` to distribute a positive join on
     ``cols`` over S's stored segments — each pre-partitioned and sorted on
@@ -983,18 +785,39 @@ class _SegmentViews(dict):
         return s.last_on(cols)
 
 
-def _fixpoint_seminaive_segmented(
-    exit_dfs: dict, step, cfg: FixpointConfig, pivot_cols: dict | None = None,
-    probe: dict | None = None,
+def fixpoint_seminaive(
+    exit_dfs: dict,
+    step,
+    cfg: FixpointConfig | None = None,
+    pivot_cols: dict | None = None,
 ) -> dict:
-    """PSN with the accumulated set held as co-partitioned segments.
+    """Parallel semi-naive fixpoint over one or more mutually-recursive
+    predicates.
 
-    Identical semantics to the legacy path; differs only in how S is stored
-    and how Δ' = T_R(Δ) − S plans: the candidate side shuffles+sorts once,
-    every stored segment merge-joins in place (see _SegmentedSet)."""
+    exit_dfs: pred -> seed DataFrame (already distinct / canonical columns).
+    step(all_dfs, delta_dfs) -> pred -> candidate DataFrame of newly
+        derivable tuples (may contain already-known rows; this function
+        anti-joins them away — SetRDD.diff semantics, SetRDD.scala:111-126).
+    pivot_cols: pred -> pivot columns of a decomposable recursion (see the
+        GPS-lite probe below).
+
+    The accumulated set S is held as co-partitioned sorted segments
+    (_SegmentedSet): Δ' = T_R(Δ) − S shuffles and sorts the candidate side
+    once, and every stored segment merge-joins in place — per-iteration
+    shuffle is O(|Δ|), not O(|S|) (the SetRDD partition-stable store,
+    re-expressed via localCheckpoint's preserved outputPartitioning; AQE is
+    off inside the loop because its plan wrapper hides that partitioning
+    at checkpoint capture). Measured on sf1 non-linear TC (3.1M-row
+    closure) against the former union-based S ∪ Δ store: 25 s → 21 s.
+
+    Returns pred -> fixpoint DataFrame.
+    """
+    cfg = cfg or FixpointConfig()
+    _truncate_marked_ancestors(exit_dfs)
+    # the step planned once against plain seed dicts (plan construction
+    # only, no job runs): the schema probe for seed widening
+    probe = step(dict(exit_dfs), dict(exit_dfs))
     spark = next(iter(exit_dfs.values())).sparkSession
-    if probe is None:
-        probe = step(exit_dfs, exit_dfs)
     n_loop = _loop_partitions(spark, exit_dfs, cfg)
     n_shuffle = n_loop or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # widen BEFORE the pivot probe: an un-widened seed (e.g. the
@@ -1051,6 +874,9 @@ def _fixpoint_seminaive_segmented(
     sets: dict[str, _SegmentedSet] = {}
     delta_dfs: dict[str, DataFrame] = {}
     live = set()
+    # sealed EMPTY deltas: never appended, so no segment owns their
+    # blocks; freed once the next iteration's step has read them
+    empties: list[DataFrame] = []
     with _aqe_off(spark, n_loop):
         for pred, df in exit_dfs.items():
             pc = piv.get(pred)
@@ -1071,6 +897,8 @@ def _fixpoint_seminaive_segmented(
             if n:
                 sset.append(seg)
                 live.add(pred)
+            else:
+                empties.append(seg)
             sets[pred] = sset
             delta_dfs[pred] = seg if pc else _narrow_small(seg, n, cfg)
 
@@ -1083,6 +911,7 @@ def _fixpoint_seminaive_segmented(
                     f"fixpoint did not converge within {cfg.max_iterations} iterations"
                 )
             candidates = step(_SegmentViews(sets), delta_dfs)
+            spent, empties = empties, []
             live = set()
             new_delta: dict[str, DataFrame] = {}
             for pred, cand in candidates.items():
@@ -1104,6 +933,7 @@ def _fixpoint_seminaive_segmented(
                     # converged pred: the newest segment is no longer the
                     # delta — delta_on must stop serving it
                     sset._last_is_delta = False
+                    empties.append(delta)
                 new_delta[pred] = (
                     delta if pred in piv else _narrow_small(delta, n, cfg)
                 )
@@ -1117,9 +947,11 @@ def _fixpoint_seminaive_segmented(
             # iteration's step plans still read)
             for sset in sets.values():
                 sset.release_retired()
+            release_checkpoint_blocks(spent)
 
     for sset in sets.values():
         sset.release_all_retired()
+    release_checkpoint_blocks(empties)
     return {pred: s.view() for pred, s in sets.items()}
 
 
@@ -1140,8 +972,7 @@ def _union_capped(all_df: DataFrame, delta: DataFrame, cfg: FixpointConfig) -> D
     )
     # Track the partition count driver-side (a union's count is the sum of
     # its parents') instead of probing grown.rdd each iteration: .rdd on an
-    # AQE-rooted plan runs full physical planning per call, and on a
-    # non-checkpoint lineage would finalize stages eagerly. The one-time
+    # AQE-rooted plan runs full physical planning per call. The one-time
     # probes below hit frames that are already materialized (counted +
     # stored), so they reuse completed stages.
     parts = getattr(all_df, "_bdlog_parts", None)
@@ -1159,7 +990,8 @@ def _union_capped(all_df: DataFrame, delta: DataFrame, cfg: FixpointConfig) -> D
 
 
 # Aggregate-table maintenance is deliberately JOIN-FREE (union + keyed
-# re-aggregate for the merge, exceptAll for the delta):
+# re-aggregate for the merge, a filter over that same aggregate for the
+# delta — see _merge_monotonic):
 #
 # * Null safety — GROUP BY and set operations treat NULL keys as a regular
 #   group (SQL semantics), so a null-key group merges and converges instead
@@ -1206,15 +1038,13 @@ def _merge_monotonic(
     vcol: str,
     agg_fn,
     out_cols: list,
-    cfg: FixpointConfig,
-    cache: "_GenerationCache",
     vtype=None,
 ):
     """Merge a monotonic-aggregate table with a contribution stream and
-    derive the changed-group delta — the ONE fused keyed aggregate all
-    three monotonic sites share (fixpoint_monotonic's loop, and
-    fixpoint_mixed's mmin/mmax and mcount/msum branches; previously three
-    hand-kept copies of the same subtle __old/__seen/__oldv contract).
+    derive the changed-group delta — the ONE fused keyed aggregate both
+    monotonic branches of fixpoint_mixed share (mmin/mmax and
+    mcount/msum; formerly hand-kept copies of the same subtle
+    __old/__seen/__oldv contract).
 
     Join-free by design (see the maintenance note above _union_capped):
     tag table rows __old=1 and contributions __old=0, aggregate once per
@@ -1240,7 +1070,7 @@ def _merge_monotonic(
         F.max(F.col("__old")).alias("__seen"),
         old_v.alias("__oldv"),
     )
-    merged_all = _retain(_truncate(merged_all, cfg), cfg, cache)
+    merged_all = _truncate(merged_all)
     merged = merged_all.select(*out_cols)
     improved = merged_all.where(
         (F.col("__seen") == 0) | ~F.col(vcol).eqNullSafe(F.col("__oldv"))
@@ -1281,8 +1111,6 @@ def fixpoint_mixed(
     """
     cfg = cfg or FixpointConfig()
     _truncate_marked_ancestors(exit_dfs)
-    cache = _GenerationCache(cfg)
-
     probe = step(exit_dfs, exit_dfs)
 
     def aggregate(pred: str, contrib: DataFrame) -> DataFrame:
@@ -1312,18 +1140,17 @@ def fixpoint_mixed(
             if spec.additive:
                 # no count job for the support store — the table count below
                 # is the action that materializes its checkpoint blocks
-                support = _truncate(df.distinct(), cfg)
-                supports[pred] = _retain(support, cfg, cache)
+                supports[pred] = _truncate(df.distinct())
                 table = aggregate(pred, supports[pred])
             else:
                 table = aggregate(pred, df)
-            table, nt = _materialize(table, cfg, cache)
+            table, nt = _materialize(table)
             all_dfs[pred] = table
             delta_dfs[pred] = table
             if nt:
                 live.add(pred)
         else:
-            df, n, hn = _materialize_nd(df.distinct(), cfg, cache)
+            df, n, hn = _materialize_nd(df.distinct())
             if hn:
                 null_preds.add(pred)
             all_dfs[pred] = df
@@ -1338,7 +1165,6 @@ def fixpoint_mixed(
             raise RuntimeError(
                 f"mixed fixpoint did not converge within {cfg.max_iterations}"
             )
-        cache.next_generation()
         candidates = step(all_dfs, delta_dfs)
         live = set()
         new_all = dict(all_dfs)
@@ -1357,17 +1183,15 @@ def fixpoint_mixed(
                     delta = cand.distinct().join(
                         all_dfs[pred], on=list(cand.columns), how="left_anti"
                     )
-                delta, n, hn = _materialize_nd(delta, cfg, cache)
+                delta, n, hn = _materialize_nd(delta)
                 if hn:
                     null_preds.add(pred)
                 delta = _narrow_small(delta, n, cfg)
                 new_delta[pred] = delta
                 if n:
                     live.add(pred)
-                    new_all[pred] = _retain(
-                        _truncate(_union_capped(all_dfs[pred], delta, cfg), cfg),
-                        cfg,
-                        cache,
+                    new_all[pred] = _truncate(
+                        _union_capped(all_dfs[pred], delta, cfg)
                     )
                 continue
 
@@ -1384,14 +1208,14 @@ def fixpoint_mixed(
                 # NO count job on fresh: the delta count below is the one
                 # job that materializes the fresh/merged/delta checkpoints
                 # (one job per iteration, like the mmin/mmax branch).
-                fresh = _retain(_truncate(cand.distinct().exceptAll(supports[pred]), cfg), cfg, cache)
+                fresh = _truncate(cand.distinct().exceptAll(supports[pred]))
                 # merge: cumulative table + per-group increments via ONE
                 # keyed SUM over table ∪ increments (null-safe GROUP BY;
                 # for mcount the increment is already a per-group count, so
                 # the merge aggregate is SUM for both mcount and msum)
                 inc = aggregate(pred, fresh)
                 # merge + delta in ONE keyed aggregate over tagged
-                # table ∪ increments (same fusion as fixpoint_monotonic):
+                # table ∪ increments (same fusion as the mmin/mmax branch):
                 # the pass carries the group's old cumulative value and a
                 # presence flag, so changed groups are a FILTER instead of
                 # a merged.exceptAll(table) that re-shuffled 2|table| more
@@ -1399,10 +1223,10 @@ def fixpoint_mixed(
                 # sum 0) leave value == old value and are correctly
                 # excluded, as exceptAll excluded the identical row.
                 merged, delta = _merge_monotonic(
-                    table, inc, keys, vcol, F.sum, spec.cols, cfg, cache,
+                    table, inc, keys, vcol, F.sum, spec.cols,
                     vtype=table.schema[vcol].dataType,
                 )
-                delta, nd = _materialize(delta, cfg, cache)
+                delta, nd = _materialize(delta)
                 new_delta[pred] = _narrow_small(delta, nd, cfg)
                 # supports must absorb fresh EVEN when the table is
                 # unchanged (nd == 0): sign-mixed msum contributions can
@@ -1411,10 +1235,8 @@ def fixpoint_mixed(
                 # partial re-derivation (+5 alone) slip past the exceptAll
                 # and be counted a second time. One extra union per no-op
                 # iteration is the price of soundness for signed msum.
-                supports[pred] = _retain(
-                    _truncate(_union_capped(supports[pred], fresh, cfg), cfg),
-                    cfg,
-                    cache,
+                supports[pred] = _truncate(
+                    _union_capped(supports[pred], fresh, cfg)
                 )
                 if not nd:
                     continue
@@ -1422,16 +1244,23 @@ def fixpoint_mixed(
                 new_all[pred] = merged
             else:
                 cand = _cast_like(cand, table)
-                # single-pass merge + delta, as in fixpoint_monotonic: one
-                # keyed min/max over tagged table ∪ contributions carrying
-                # the old value + presence flag; improved groups are a
-                # filter over the same checkpointed frame (null-safe value
-                # compare, so NULL-valued groups don't re-report forever)
+                # merge + delta detection in ONE keyed min/max over tagged
+                # S ∪ candidates (join-free: see the maintenance note
+                # above). Alongside the new min/max, the pass carries the
+                # group's OLD value and a presence flag; the delta is then
+                # a FILTER over the same checkpointed frame: new groups, or
+                # groups whose value changed (null-safe compare, so
+                # NULL-valued groups don't re-report forever). This
+                # replaces merged.exceptAll(all), which re-shuffled 2|S|
+                # more per iteration on top of the |S|+|Δ| merge exchange
+                # (TungstenMonotonicAggregationIterator.scala:512-555
+                # tracks "changed groups" inside its hash table the same
+                # way).
                 mfn = F.min if spec.func == "mmin" else F.max
                 merged, improved = _merge_monotonic(
-                    table, cand, keys, vcol, mfn, spec.cols, cfg, cache
+                    table, cand, keys, vcol, mfn, spec.cols
                 )
-                improved, n = _materialize(improved, cfg, cache)
+                improved, n = _materialize(improved)
                 improved = _narrow_small(improved, n, cfg)
                 new_delta[pred] = improved
                 new_all[pred] = merged
@@ -1439,9 +1268,22 @@ def fixpoint_mixed(
                     live.add(pred)
         for pred in all_dfs:
             new_delta.setdefault(pred, _empty_like(all_dfs[pred]))
+        # Superseded aggregate tables/deltas: each was materialized by its
+        # own iteration's count and is the lazy parent of no checkpoint,
+        # so this iteration's counts finished every read of them. Set-pred
+        # frames are left to the ContextCleaner: S ∪ Δ seals lazily, and a
+        # release could orphan it. ``keep`` guards frames still current
+        # (an unchanged table, or an empty delta viewing it).
+        release_checkpoint_blocks(
+            [f for p in agg_specs for f in (all_dfs[p], delta_dfs[p])],
+            keep=[f for p in agg_specs for f in (new_all[p], new_delta[p])],
+        )
         all_dfs = new_all
         delta_dfs = new_delta
 
+    release_checkpoint_blocks(
+        [delta_dfs[p] for p in agg_specs], keep=[all_dfs[p] for p in agg_specs]
+    )
     return all_dfs
 
 
@@ -1453,7 +1295,8 @@ def fixpoint_monotonic(
     func: str,
     cfg: FixpointConfig | None = None,
 ) -> DataFrame:
-    """Monotonic-aggregate (mmin/mmax) fixpoint.
+    """Monotonic-aggregate (mmin/mmax) fixpoint: the one-predicate case
+    of fixpoint_mixed, with a single-frame step.
 
     exit_pre_agg: DataFrame of (keys..., value) contributions from exit rules.
     step(all_df, delta_df) -> DataFrame of new (keys..., value) contributions
@@ -1466,56 +1309,11 @@ def fixpoint_monotonic(
     (AggregateSetRDDMinMaxPartition.scala:42-57): merge candidate values into
     the running table, emit only improved/new groups as the next delta.
     """
-    cfg = cfg or FixpointConfig()
-    _truncate_marked_ancestors(exit_pre_agg)
-    cache = _GenerationCache(cfg)
-    agg_fn = F.min if func == "mmin" else F.max
+    def one_pred_step(all_dfs, delta_dfs):
+        return {"__m": step(all_dfs["__m"], delta_dfs["__m"])}
 
-    def aggregate(df: DataFrame) -> DataFrame:
-        return df.groupBy(*key_cols).agg(agg_fn(F.col(value_col)).alias(value_col))
-
-    # schema probe (see fixpoint_seminaive): widen exit literal types to the
-    # recursive-step types before seeding the aggregate table
-    probe = step(exit_pre_agg, exit_pre_agg)
-    exit_pre_agg = _widen_seed(exit_pre_agg, probe)
-
-    all_df = aggregate(exit_pre_agg)
-    all_df, n = _materialize(all_df, cfg, cache)
-    delta = all_df
-
-    iteration = 0
-    while n:
-        iteration += 1
-        if iteration > cfg.max_iterations:
-            raise RuntimeError(
-                f"monotonic fixpoint did not converge within {cfg.max_iterations}"
-            )
-        cache.next_generation()
-        cand = step(all_df, delta)
-        if cand is None:
-            break
-        cand = _cast_like(cand, all_df)
-        if _plan_is_empty(cand):
-            break
-        # merge + delta detection in ONE keyed aggregate over tagged
-        # S ∪ candidates (join-free: see the maintenance note above).
-        # Alongside the new min/max, the pass carries the group's OLD
-        # value (aggregated over old-tagged rows only — the table has one
-        # row per group, so agg_fn reproduces it) and a presence flag;
-        # the delta is then a FILTER over the same checkpointed frame:
-        # new groups, or groups whose value changed (null-safe compare —
-        # a group whose stored value is genuinely NULL must not re-report
-        # forever). This replaces merged.exceptAll(all), which re-shuffled
-        # 2|S| more per iteration on top of the |S|+|Δ| merge exchange
-        # (TungstenMonotonicAggregationIterator.scala:512-555 tracks
-        # "changed groups" inside its hash table the same way).
-        merged, improved = _merge_monotonic(
-            all_df, cand, key_cols, value_col, agg_fn,
-            [*key_cols, value_col], cfg, cache,
-        )
-        improved, n = _materialize(improved, cfg, cache)
-        improved = _narrow_small(improved, n, cfg)
-        all_df = merged
-        delta = improved
-
-    return all_df
+    out = fixpoint_mixed(
+        {"__m": exit_pre_agg}, one_pred_step,
+        {"__m": AggSpec(list(key_cols), value_col, func)}, cfg,
+    )
+    return out["__m"]

@@ -1,4 +1,4 @@
-"""NULL-bearing tuples in fixpoints + non-checkpoint mode + seed widening.
+"""NULL-bearing tuples in fixpoints + seed widening.
 
 NULLs are outside the DeAL data model (the reference's loader cannot
 produce them — SURVEY §1.2 'no nulls-by-design'), but register() accepts
@@ -14,11 +14,12 @@ actually seen, so the universal null-free path plans unchanged.
 """
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bigdatalog_spark import BigDatalogContext
 from bigdatalog_spark.datalog.context import EngineConfig
-from bigdatalog_spark.datalog.fixpoint import FixpointConfig
+from bigdatalog_spark.datalog.fixpoint import FixpointConfig, fixpoint_mixed
 from bigdatalog_spark.datalog.semantics import DatalogSemanticError
 
 PROG = (
@@ -66,11 +67,26 @@ def test_null_tuple_set_semantics_segmented(spark):
 
 
 def test_null_tuple_set_semantics_legacy_loop(spark):
-    rows = _run(
-        spark, PROG, [(0, 5)], _nullable_q(spark), "p(A,B).",
-        fixpoint=FixpointConfig(copartitioned_set=False), **DISTRIBUTED,
-    )
+    """The union-based S ∪ Δ set loop (formerly the standalone legacy
+    seminaive loop, now fixpoint_mixed's set-predicate branch) keeps set
+    semantics through its own null-safe anti: the null tuple (0, NULL) is
+    derived at iteration 1 and re-derived at iteration 2."""
+    q = _nullable_q(spark).alias("q")
+    # the exit rule's answer over arc = [(0, 5)]
+    seed = spark.createDataFrame([(0, 1), (0, 6)], "x long, w long")
+
+    def step(all_dfs, delta_dfs):
+        d = delta_dfs["p"].alias("d")
+        return {
+            "p": d.join(q, F.col("d.w") == F.col("q.y")).select(
+                F.col("d.x").alias("x"), F.col("q.w").alias("w")
+            )
+        }
+
+    out = fixpoint_mixed({"p": seed}, step, {})
+    rows = [tuple(r) for r in out["p"].collect()]
     assert len(rows) == len(set(rows)) == 4
+    assert sorted(rows, key=_key) == [(0, None), (0, 1), (0, 6), (0, 9)]
 
 
 def test_null_passthrough_cycle_converges(spark):
@@ -97,32 +113,6 @@ def test_local_paths_already_null_safe(spark):
     """The in-task/driver pandas loops dedup NaN-equal — same 4-row answer."""
     rows = _run(spark, PROG, [(0, 5)], _nullable_q(spark), "p(A,B).")
     assert len(rows) == len(set(rows)) == 4
-
-
-def test_non_checkpoint_mode_matches_default(spark):
-    """checkpoint=False (explicit persist-generation mode): same closure as
-    the default checkpointed loop — covers the persist-before-count and
-    keep-all-generations policies. TINY chain only: without checkpointing
-    there is no lineage truncation, so each iteration's plan contains all
-    prior plans and analysis cost grows superlinearly — the mode is a
-    debugging aid, which is why checkpoint defaults True (mirroring the
-    reference's memorycheckpoint=true default, README.md:32)."""
-    ctx = BigDatalogContext(
-        spark,
-        EngineConfig(
-            fixpoint=FixpointConfig(checkpoint=False), **DISTRIBUTED
-        ),
-    )
-    ctx.load_program(
-        "database({arc(A:integer, B:integer)})."
-        "tc(A,B) <- arc(A,B)."
-        "tc(A,B) <- tc(A,C), arc(C,B)."
-    )
-    chain = [f"{i},{i + 1}" for i in range(4)]
-    ctx.register_data("arc", chain)
-    got = sorted(tuple(r) for r in ctx.query("tc(A,B).").collect())
-    want = sorted((i, j) for i in range(4) for j in range(i + 1, 5))
-    assert got == want
 
 
 def test_driver_row_takes_null_path(spark, monkeypatch):

@@ -1,10 +1,12 @@
 """Segmented (co-partitioned, SetRDD-style) accumulated-set fixpoint.
 
-Pins (1) result parity between the segmented and legacy union-based PSN
-paths, (2) the scale property the design exists for: after segments are
-sealed, `candidates − S` plans exactly one Exchange and one Sort — both on
-the candidate side — regardless of how many segments S holds (reference
-parity: SetRDD.scala:111-126 diffs partition-locally without reshuffling S).
+Pins (1) result parity between the segmented PSN loop and a pure-Python
+transitive closure, (2) the scale property the design exists for: after
+segments are sealed, `candidates − S` plans exactly one Exchange and one
+Sort — both on the candidate side — regardless of how many segments S
+holds (reference parity: SetRDD.scala:111-126 diffs partition-locally
+without reshuffling S), (3) that reset() leaves no persistent RDD of a
+distributed fixpoint behind.
 """
 
 import pyspark.sql.functions as F
@@ -43,16 +45,26 @@ CHAIN = [(i, i + 1) for i in range(25)]
 DIAMOND = [(0, 1), (0, 2), (1, 3), (2, 3), (3, 4)]
 
 
+def _python_closure(pairs):
+    closure = set(pairs)
+    while True:
+        grown = closure | {
+            (a, d) for a, b in closure for c, d in pairs if b == c
+        }
+        if grown == closure:
+            return closure
+        closure = grown
+
+
 @pytest.mark.parametrize("pairs", [CYCLE, CHAIN, DIAMOND])
-def test_segmented_matches_legacy(spark, pairs):
-    seg = _tc(spark, pairs, FixpointConfig(copartitioned_set=True, max_segments=3))
-    legacy = _tc(spark, pairs, FixpointConfig(copartitioned_set=False))
-    assert seg == legacy and len(seg) > 0
+def test_segmented_matches_python_closure(spark, pairs):
+    seg = _tc(spark, pairs, FixpointConfig(max_segments=3))
+    assert seg == _python_closure(pairs) and len(seg) > 0
 
 
 def test_compaction_triggers_and_preserves(spark):
     # 25-edge chain → 25 iterations → several compactions at max_segments=2
-    seg = _tc(spark, CHAIN, FixpointConfig(copartitioned_set=True, max_segments=2))
+    seg = _tc(spark, CHAIN, FixpointConfig(max_segments=2))
     want = {(i, j) for i in range(26) for j in range(i + 1, 26)}
     assert seg == want
 
@@ -92,3 +104,47 @@ def test_aqe_restored_after_fixpoint(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     _tc(spark, DIAMOND, FixpointConfig())
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+@pytest.mark.parametrize(
+    "program,goal,lines",
+    [
+        (
+            "database({arc(A:integer, B:integer)})."
+            "tc(A,B) <- arc(A,B)."
+            "tc(A,B) <- tc(A,C), tc(C,B).",
+            "tc(A,B).",
+            [f"{i // 2},{i}" for i in range(1, 100)],
+        ),
+        (
+            "database({arc(X:integer, Y:integer)})."
+            "cc3(X,mmin<X>) <- arc(X,_)."
+            "cc3(Y,mmin<V>) <- cc3(X,V), arc(X,Y).",
+            "cc3(X,Y).",
+            [f"{i},{i + 1}" for i in range(30)]
+            + [f"{i + 1},{i}" for i in range(30)],
+        ),
+    ],
+    ids=["tc_seminaive", "mmin_monotonic"],
+)
+def test_reset_releases_distributed_fixpoint_blocks(spark, program, goal, lines):
+    """A distributed fixpoint query followed by reset() leaves no persistent
+    RDD behind: result segments/tables are released by reset(), and the
+    loops release superseded tables and empty deltas themselves."""
+    from bigdatalog_spark import BigDatalogContext
+    from bigdatalog_spark.datalog.context import EngineConfig
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    ctx = BigDatalogContext(
+        spark,
+        EngineConfig(
+            local_seed_max_rows=0, decomposable_local=False, driver_local=False
+        ),
+    )
+    ctx.load_program(program)
+    ctx.register_data("arc", lines)
+    assert ctx.query(goal).count() > 0
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) - before
+    ctx.reset()
+    assert not set(jsc.getPersistentRDDs().keySet().toArray()) - before
