@@ -49,6 +49,7 @@ from .fixpoint import (
     release_checkpoint_blocks,
 )
 from .local_eval import (
+    ROW_BYTES,
     _static_pd,
     broadcast_seed_statics,
     driver_exit_seed,
@@ -56,10 +57,12 @@ from .local_eval import (
     driver_seminaive,
     local_monotonic_fixpoint,
     local_seminaive_fixpoint,
+    pivot_tasks,
     schema_pd_dtypes,
     seed_broadcast_mixed,
     seed_broadcast_monotonic,
     seed_broadcast_seminaive,
+    seed_slices,
 )
 from .parser import parse_goal, parse_program
 from .semantics import AnalyzedProgram, Clique, DatalogSemanticError, analyze
@@ -171,20 +174,22 @@ class EngineConfig:
     local_growth_factor: int = 64
     local_growth_floor: int = 1 << 22
     # DRIVER TIER: a local fixpoint whose task count would be exactly one
-    # (non-linear cliques — slicing is unsound for them; mixed cliques —
-    # thresholds need global counts; single-tuple seeds) runs the identical
-    # pandas loop on the driver instead: seeds and statics are already
-    # driver-resident for broadcasting, so the job launch, torrent
-    # broadcast, and Arrow roundtrip are pure overhead. Growth bailout and
-    # distributed fallback are unchanged. Off = always run in a task.
+    # runs the identical pandas loop on the driver instead: seeds and
+    # statics are already driver-resident, so the job launch, torrent
+    # broadcast, and Arrow roundtrip are pure overhead. Set semantics ask
+    # the in-task tier's own sizing for the seed's exact row count (pivot:
+    # 32 KiB per task; slices: 64 seeds per task; non-linear: one task) —
+    # bound goals' few-row seeds land here; mixed cliques (thresholds need
+    # global counts) always run one task. Growth bailout and distributed
+    # fallback are unchanged. Off = always run in a task.
     driver_local: bool = True
-    # Non-linear cliques above this TOTAL seed size stay on the in-task
-    # path even though both run one task: a whole-base-relation seed
-    # (non-linear TC over all of arc) predicts a closure large enough that
-    # the driver-side createDataFrame of the result costs more than the
-    # job it saves (measured: 247k-row closure ~0.15s worse driver-side;
-    # small demand/threshold seeds ~0.5-1.5s better). Mixed cliques are
-    # exempt — their aggregate tables stay small by construction.
+    # Set-semantics seeds above this TOTAL size stay on the in-task path
+    # even when both run one task: a whole-base-relation seed (non-linear
+    # TC over all of arc) predicts a closure large enough that the
+    # driver-side createDataFrame of the result costs more than the job it
+    # saves (measured: 247k-row closure ~0.15s worse driver-side; small
+    # demand/threshold seeds ~0.5-1.5s better). Mixed cliques are exempt —
+    # their aggregate tables stay small by construction.
     driver_seed_max_rows: int = 8192
     # _demand_chain_fallback's driver-BFS fetch gate (rows). The effective
     # gate is additionally capped at broadcast_max_bytes / row-width, so
@@ -230,6 +235,13 @@ class BigDatalogContext:
         # stratified magic/guarded pair) is fetched from the cluster once
         # per query instead of once per clique; shared with sub-contexts
         self._statics_pd: dict[int, tuple] = {}
+        # statics set -> (frames, broadcast) memo for the pivot tiers'
+        # statics broadcast (local_eval._collect_statics): one broadcast
+        # per program, not one per goal; destroyed by _release_results
+        self._statics_bc: dict[tuple, tuple] = {}
+        # set while a step plan is built only for its schema
+        # (_schema_probe): static sides pass through untouched
+        self._plain_statics = False
         self._analyzed: AnalyzedProgram | None = None
 
     # ------------------------------------------------------------- loading
@@ -239,10 +251,29 @@ class BigDatalogContext:
         self.program.schemas.update(prog.schemas)
         self.program.rules.extend(prog.rules)
         self._analyzed = None
-        self._cache.clear()
-        self._clear_bound_memo()
+        self._release_results()
         self._statics_pd.clear()
         return self
+
+    def _release_results(self, keep=()) -> None:
+        """Drop the memoized results — unbound (``_cache``) and bound-goal
+        (``_bound_memo``) — and the statics broadcasts, releasing what they
+        own: checkpoint blocks and broadcast blocks. Registered relations
+        (plus ``keep``) are the caller's, so their leaves are never
+        released. Every invalidation point (load_program, register, reset)
+        goes through here: dropping only the references would leave the
+        blocks to JVM GC + ContextCleaner timing."""
+        release_checkpoint_blocks(
+            self._cache.values(), keep=[*self._relations.values(), *keep]
+        )
+        self._cache.clear()
+        self._clear_bound_memo()
+        for _, bc in self._statics_bc.values():
+            try:
+                bc.destroy()
+            except Exception:
+                pass
+        self._statics_bc.clear()
 
     def _clear_bound_memo(self) -> None:
         """Drop every memoized bound-goal frame AND release its
@@ -278,9 +309,8 @@ class BigDatalogContext:
                     f"DataFrame width {len(df.columns)} != declared arity "
                     f"{len(decl.columns)} for {name!r}"
                 )
+        self._release_results(keep=[df])
         self._relations[name] = df
-        self._cache.clear()
-        self._clear_bound_memo()
 
     def register_data(self, name: str, lines, num_partitions: int | None = None) -> None:
         """Load inline CSV lines per the declared schema
@@ -315,13 +345,9 @@ class BigDatalogContext:
         the context owns (result checkpoint blocks, persisted statics,
         local-eval broadcasts): frames query() returned before a reset stop
         being re-executable. Registered relations' blocks are the caller's."""
-        release_checkpoint_blocks(
-            self._cache.values(), keep=self._relations.values()
-        )
+        self._release_results()
         self.program = Program()
         self._relations.clear()
-        self._cache.clear()
-        self._clear_bound_memo()
         for store in (self._persisted_statics, self._shuffled_statics):
             for df in store.values():
                 try:
@@ -1050,6 +1076,7 @@ class BigDatalogContext:
         sub._collected_statics = self._collected_statics
         sub._broadcasts = self._broadcasts
         sub._statics_pd = self._statics_pd
+        sub._statics_bc = self._statics_bc
         sub._analyzed = analyze(sub.program)
         return sub._pred_df(guarded_name)
 
@@ -1258,6 +1285,7 @@ class BigDatalogContext:
         sub._collected_statics = self._collected_statics
         sub._broadcasts = self._broadcasts
         sub._statics_pd = self._statics_pd
+        sub._statics_bc = self._statics_bc
         sub._analyzed = analyze(sub.program)
 
         # Evaluation-cost gate: when the SIP routes a later occurrence's
@@ -1506,7 +1534,12 @@ class BigDatalogContext:
         once into a JVM-side LocalRelation, whose BroadcastExchange builds
         driver-locally — the per-iteration rebroadcast then launches NO job
         at all (a driver loop otherwise pays one broadcast-build job per
-        static per iteration)."""
+        static per iteration).
+
+        Under _schema_probe the frame passes through untouched: a plan
+        built only for its schema must not persist or collect anything."""
+        if self._plain_statics:
+            return df
         key = id(df._jdf)
         if key not in self._persisted_statics:
             self._persisted_statics[key] = df.persist()
@@ -1614,7 +1647,7 @@ class BigDatalogContext:
         small enough to broadcast — broadcast beats co-partitioning there."""
 
         def hook(pred, positions):
-            if pred in clique_preds:
+            if pred in clique_preds or self._plain_statics:
                 return None
             df = static_df(pred)
             # bounded-probe estimate, not raw Catalyst stats: RDD-backed
@@ -1866,6 +1899,52 @@ class BigDatalogContext:
             # inside an atom argument) — the Spark pipeline still serves it
             return None
 
+    def _schema_probe(self, step, *args):
+        """``step(*args)`` built only for its output schema (the local tiers
+        widen their seeds to it, _widen_seed). The static sides pass through
+        plain: _maybe_broadcast would persist each static and collect the
+        tiny ones into LocalRelations — one job per static for a plan that
+        is thrown away (every magic-set goal collected its demand set)."""
+        self._plain_statics = True
+        try:
+            return step(*args)
+        finally:
+            self._plain_statics = False
+
+    def _local_seed_pdf(self, rules, exit_df, seed, max_rows, **exit_kw):
+        """A local tier's seed as pandas: pandas evaluation of the exit
+        rules over driver-resident statics first (_driver_exit_pdf, no
+        job), else ONE bounded fetch of at most ``max_rows + 1`` rows —
+        filling the limit always trips the caller's gate, so a surviving
+        frame of at most ``max_rows`` rows is provably the complete seed.
+        Restricted exits (demand semi-join, ``_bdlog_no_driver_exit``)
+        skip the pandas shortcut: it re-evaluates the RULES, bypassing the
+        semi-join frame. Provably empty exits (``_bdlog_empty_exit``)
+        fold to a job-free limit(0) fetch that keeps the widened dtypes."""
+        if getattr(exit_df, "_bdlog_empty_exit", False):
+            return seed.limit(0).toPandas()
+        pdf = (
+            None
+            if getattr(exit_df, "_bdlog_no_driver_exit", False)
+            else self._driver_exit_pdf(rules, seed, **exit_kw)
+        )
+        if pdf is None:
+            pdf = seed.limit(max_rows + 1).toPandas()
+        return pdf
+
+    def _on_driver(self, rows: int, tasks: int) -> bool:
+        """The driver-tier rule for set-semantics local fixpoints: run on
+        the driver exactly when the in-task tier would schedule ONE task
+        for this seed (``tasks``, from the tier's own sizing) — the same
+        PSN loop under the same growth budget, minus the job launch, the
+        broadcast and the Arrow round trip. driver_seed_max_rows keeps
+        whole-relation seeds in a task (see EngineConfig)."""
+        return (
+            self.config.driver_local
+            and tasks == 1
+            and rows <= self.config.driver_seed_max_rows
+        )
+
     def _try_local_seminaive(
         self, clique: Clique, exit_dfs: dict, step, seed_filter: dict | None = None
     ):
@@ -1879,86 +1958,26 @@ class BigDatalogContext:
         whole fixpoint runs in ONE task (slicing is unsound when a
         derivation combines tuples from different seeds' closures), the
         same single-job trade the mixed-clique path makes
-        (FixedPointResultTask.scala:44-106 covers these too)."""
+        (FixedPointResultTask.scala:44-106 covers these too).
+
+        ONE-TASK RULE (_on_driver): whichever mode applies, the seed is
+        computed on the driver first (job-free pandas exit evaluation,
+        else a bounded fetch) and the mode's own sizing is asked how many
+        tasks it would schedule for that exact row count — pivot_tasks for
+        mode 1, seed_slices for mode 2, one for mode 3. One task runs
+        driver_seminaive instead: a bound goal's few-row seed (``tc(c,B)``)
+        launches no fixpoint job. A growth abort there returns None — the
+        distributed fallback; an in-task retry would run the identical loop
+        under the same budget."""
         shape = self._local_clique_shape(clique)
         if shape is None:
             return None
         statics = self._local_statics(self._clique_static_preds(clique))
         if statics is None:
             return None
-
-        info = self._decomposable_info(clique) if shape == "linear" else None
-        if info is not None:
-            pivot_idx, _ = info
-            pred = clique.preds[0]
-            exit_df = exit_dfs[pred]
-            probe = step({pred: exit_df}, {pred: exit_df}).get(pred)
-            seed = _widen_seed(exit_df.distinct(), probe)
-            out = local_seminaive_fixpoint(
-                self.spark,
-                seed,
-                clique.recursive_rules[pred],
-                clique.preds,
-                statics,
-                [seed.columns[i] for i in pivot_idx],
-                track=self._broadcasts,
-                growth=self._growth,
-                pd_cache=self._statics_pd,
-            )
-            mat = self._eager_local(out)
-            return None if mat is None else {pred: mat}
-
-        # seed-broadcast mode: bounded-probe the total seed size first
-        max_rows = self._seed_gate(*(df.schema for df in exit_dfs.values()))
-        probes = step(exit_dfs, exit_dfs)
-        seeds: dict[str, tuple] = {}
-        total = 0
-        for pred in clique.preds:
-            seed = _widen_seed(exit_dfs[pred].distinct(), probes.get(pred))
-            if getattr(exit_dfs[pred], "_bdlog_empty_exit", False):
-                # pred has no exit rules (mutual cliques; magic preds whose
-                # demand arrives only recursively): the seed is provably
-                # empty, and limit(0) folds the fetch to a job-free
-                # LocalRelation while keeping the widened dtypes
-                seeds[pred] = (seed.limit(0).toPandas(), seed.schema)
-                continue
-            # pandas exit evaluation over driver-resident statics first —
-            # no cluster job; the bounded fetch is the fallback. Restricted
-            # exits (demand semi-join) can't take the shortcut: it
-            # re-evaluates the RULES, bypassing the semi-join frame
-            pdf = (
-                None
-                if getattr(exit_dfs[pred], "_bdlog_no_driver_exit", False)
-                else self._driver_exit_pdf(
-                    clique.exit_rules[pred], seed,
-                    bound=(seed_filter or {}).get(pred),
-                )
-            )
-            if pdf is None:
-                # one bounded fetch gates AND collects: filling the limit
-                # always trips the gate (limit = budget+1-total), so a
-                # surviving pdf is provably the complete seed — no
-                # separate count() job
-                pdf = seed.limit(max_rows + 1 - total).toPandas()
-            total += len(pdf)
-            if total > max_rows:
-                return None
-            seeds[pred] = (pdf, seed.schema)
         rules_by_pred = {p: clique.recursive_rules[p] for p in clique.preds}
-        # single-task shapes (non-linear: slicing unsound; total seed of one
-        # tuple: one slice anyway) run the identical loop driver-side —
-        # strictly the same computation minus the per-clique job overhead
-        if self.config.driver_local and (
-            (shape == "nonlinear" and total <= self.config.driver_seed_max_rows)
-            or total <= 1
-        ):
-            # On a growth abort this returns None → distributed fallback;
-            # the sliced retry gains nothing for single-task shapes
-            # (identical loop, same budget). Linear MULTI-seed cliques stay
-            # on the sliced path: measured head-to-head (2730-seed demand
-            # clique, sf0.1), 32 parallel slices beat one driver loop ~2×
-            # even counting the broadcast — per-slice statics re-merges are
-            # cheaper than serializing every slice's Δ-chain on one thread.
+
+        def on_driver(seeds):
             return driver_seminaive(
                 self.spark,
                 seeds,
@@ -1968,6 +1987,60 @@ class BigDatalogContext:
                 pd_cache=self._statics_pd,
                 growth=self._growth,
             )
+
+        info = self._decomposable_info(clique) if shape == "linear" else None
+        if info is not None:
+            pivot_idx, _ = info
+            pred = clique.preds[0]
+            exit_df = exit_dfs[pred]
+            probe = self._schema_probe(
+                step, {pred: exit_df}, {pred: exit_df}
+            ).get(pred)
+            seed = _widen_seed(exit_df.distinct(), probe)
+            if self.config.driver_local:
+                pdf = self._local_seed_pdf(
+                    clique.exit_rules[pred], exit_df, seed,
+                    self.config.driver_seed_max_rows,
+                    bound=(seed_filter or {}).get(pred),
+                )
+                tasks = pivot_tasks(self.spark, len(pdf) * ROW_BYTES)
+                if self._on_driver(len(pdf), tasks):
+                    return on_driver({pred: (pdf, seed.schema)})
+            out = local_seminaive_fixpoint(
+                self.spark,
+                seed,
+                clique.recursive_rules[pred],
+                clique.preds,
+                statics,
+                [seed.columns[i] for i in pivot_idx],
+                growth=self._growth,
+                pd_cache=self._statics_pd,
+                bc_cache=self._statics_bc,
+            )
+            mat = self._eager_local(out)
+            return None if mat is None else {pred: mat}
+
+        # seed-broadcast mode: bounded-probe the total seed size first
+        max_rows = self._seed_gate(*(df.schema for df in exit_dfs.values()))
+        probes = self._schema_probe(step, exit_dfs, exit_dfs)
+        seeds: dict[str, tuple] = {}
+        total = 0
+        for pred in clique.preds:
+            seed = _widen_seed(exit_dfs[pred].distinct(), probes.get(pred))
+            pdf = self._local_seed_pdf(
+                clique.exit_rules[pred], exit_dfs[pred], seed, max_rows - total,
+                bound=(seed_filter or {}).get(pred),
+            )
+            total += len(pdf)
+            if total > max_rows:
+                return None
+            seeds[pred] = (pdf, seed.schema)
+        tasks = 1 if shape == "nonlinear" else seed_slices(self.spark, total)
+        if self._on_driver(total, tasks):
+            return on_driver(seeds)
+        # several tasks: the slices run in parallel, and that beats one
+        # driver loop — measured head-to-head (2730-seed demand clique,
+        # sf0.1), 32 slices ran ~2× faster even counting the broadcast.
         # Every pred's mapInPandas runs the SAME multi-predicate in-task
         # loop over the same seeds/statics and just projects a different
         # pred out, so ONE eager materialization proves the growth budget
@@ -2023,7 +2096,7 @@ class BigDatalogContext:
         if statics is None:
             return None
         pred = clique.preds[0]
-        probe = step(exit_df, exit_df)
+        probe = self._schema_probe(step, exit_df, exit_df)
         seed = _widen_seed(exit_df, probe)
 
         info = self._decomposable_info(clique) if shape == "linear" else None
@@ -2039,9 +2112,9 @@ class BigDatalogContext:
                 key_cols,
                 value_col,
                 func,
-                track=self._broadcasts,
                 growth=self._growth,
                 pd_cache=self._statics_pd,
+                bc_cache=self._statics_bc,
             )
             return self._eager_local(out)
 
@@ -2276,35 +2349,20 @@ class BigDatalogContext:
         if statics is None:
             return None
         max_rows = self._seed_gate(*(df.schema for df in exit_dfs.values()))
-        probes = step(exit_dfs, exit_dfs)
+        probes = self._schema_probe(step, exit_dfs, exit_dfs)
         seeds_pd: dict = {}
         schemas: dict = {}
         total = 0
         for pred in clique.preds:
             seed = _widen_seed(exit_dfs[pred].distinct(), probes.get(pred))
-            if getattr(exit_dfs[pred], "_bdlog_empty_exit", False):
-                # no exit rules → provably empty seed; job-free fetch
-                # keeps the widened dtypes (see the seminaive note)
-                seeds_pd[pred] = seed.limit(0).toPandas()
-                schemas[pred] = seed.schema
-                continue
-            # pandas exit evaluation first (see the seminaive note); agg
-            # preds project pre-aggregate contributions, and the distinct
-            # mirrors this path's Spark pipeline (the loop keeps distinct
-            # support sets, so dedup here is semantics-preserving)
-            pdf = (
-                None
-                if getattr(exit_dfs[pred], "_bdlog_no_driver_exit", False)
-                else self._driver_exit_pdf(
-                    clique.exit_rules[pred], seed,
-                    bound=(seed_filter or {}).get(pred),
-                    pre_aggregate=pred in agg_specs,
-                )
+            # agg preds project pre-aggregate contributions, and the
+            # distinct mirrors this path's Spark pipeline (the loop keeps
+            # distinct support sets, so dedup here is semantics-preserving)
+            pdf = self._local_seed_pdf(
+                clique.exit_rules[pred], exit_dfs[pred], seed, max_rows - total,
+                bound=(seed_filter or {}).get(pred),
+                pre_aggregate=pred in agg_specs,
             )
-            if pdf is None:
-                # bounded fetch gates AND collects in one job (see the
-                # seminaive seed-broadcast note)
-                pdf = seed.limit(max_rows + 1 - total).toPandas()
             total += len(pdf)
             if total > max_rows:
                 return None

@@ -413,30 +413,32 @@ def _merge_monotonic_pd(table, cand, key_cols, value_col, func, cols):
     NOT a change. The old `oldv.isna() | (new < old)` test could not tell
     "new group" from "stored NULL", so a cycle whose only labels are NULL
     ping-ponged 'improvements' forever — an in-task infinite loop that
-    crashed the python workers. Returns (new_table, improved)."""
+    crashed the python workers. A presence column tells the two apart in
+    ONE merge, and improved groups replace their stored rows by a keyed
+    keep-last dedup (both sides are unique per key) instead of a second
+    anti-merge over the whole table. Returns (new_table, improved)."""
     import pandas as pd
 
-    m = cand.merge(
-        table, on=key_cols, how="left", suffixes=("", "__old"), indicator=True
-    )
+    old = table.assign(__present=True)
+    m = cand.merge(old, on=key_cols, how="left", suffixes=("", "__old"))
     oldv = m[value_col + "__old"]
     newv = m[value_col]
     chg = (newv < oldv) if func == "mmin" else (newv > oldv)
     if hasattr(chg, "fillna"):  # nullable extension dtypes compare to pd.NA
         chg = chg.fillna(False)
     better = (
-        (m["_merge"] == "left_only")
+        m["__present"].isna()
         | (oldv.isna() & newv.notna())
         | chg.astype(bool)
     )
     improved = m.loc[better, cols].reset_index(drop=True)
     if not len(improved):
         return table, improved
-    anti = table.merge(
-        improved[key_cols], on=key_cols, how="left", indicator=True
+    merged = pd.concat([table, improved], ignore_index=True)
+    return (
+        merged.drop_duplicates(key_cols, keep="last").reset_index(drop=True),
+        improved,
     )
-    kept = anti.loc[anti["_merge"] == "left_only", cols]
-    return pd.concat([kept, improved], ignore_index=True), improved
 
 
 def _run_mixed_pd(
@@ -625,12 +627,26 @@ def _static_pd(df, pd_cache=None):
 
 
 def _collect_statics(spark: SparkSession, statics: dict, track=None,
-                     pd_cache=None):
+                     pd_cache=None, bc_cache=None):
     """toPandas each static relation once and ship the dict as ONE broadcast
     variable (torrent-distributed, like the reference's per-iteration
-    broadcast join sides — but shipped a single time for the whole loop)."""
+    broadcast join sides — but shipped a single time for the whole loop).
+    With ``bc_cache`` (the context's program-lifetime dict, destroyed on
+    reset/load_program/register) the broadcast is memoized per statics set:
+    every in-task goal over the same statics reuses it instead of pickling
+    and shipping the same dict again. Entries pin the frames so a recycled
+    id() can never alias a different plan. Without a memo the broadcast
+    goes on ``track`` (destroyed on reset)."""
+    key = tuple(sorted((name, id(df)) for name, df in statics.items()))
+    hit = bc_cache.get(key) if bc_cache is not None else None
+    if hit is not None:
+        return hit[1]
     statics_pd = {name: _static_pd(df, pd_cache) for name, df in statics.items()}
-    return _track(spark.sparkContext.broadcast(statics_pd), track)
+    bc = spark.sparkContext.broadcast(statics_pd)
+    if bc_cache is None:
+        return _track(bc, track)
+    bc_cache[key] = (tuple(statics.values()), bc)
+    return bc
 
 
 def broadcast_seed_statics(spark: SparkSession, seeds_pd: dict, statics: dict,
@@ -744,16 +760,17 @@ def driver_seminaive(
     pd_cache=None,
     growth=DEFAULT_GROWTH,
 ):
-    """Driver-side tier for fixpoints that would run in ONE task anyway
-    (non-linear cliques, which slicing cannot serve; linear cliques whose
-    whole seed is a single tuple). The seeds and statics are already on the
-    driver — they were collected for broadcasting — so running the identical
-    in-task PSN loop right here removes the job launch, the torrent
-    broadcast, and the Arrow roundtrip: the fixed per-clique overhead that
-    dominates small interactive recursions. Scale safety is unchanged — the
-    same growth budget aborts runaway closures (returns None; the caller
-    falls back to the spill-capable distributed loop, exactly as it does
-    for an in-task abort).
+    """Driver-side tier for set-semantics fixpoints that would run in ONE
+    task anyway: non-linear cliques (slicing cannot serve them), and linear
+    cliques whose seed the pivot sizing (pivot_tasks) or the slice sizing
+    (seed_slices) gives a single task — e.g. a bound goal's few-row seed.
+    The seeds and statics are already on the driver, so running the
+    identical in-task PSN loop right here removes the job launch, the
+    torrent broadcast, and the Arrow roundtrip: the fixed per-clique
+    overhead that dominates small interactive recursions. Scale safety is
+    unchanged — the same growth budget aborts runaway closures (returns
+    None; the caller falls back to the spill-capable distributed loop,
+    exactly as it does for an in-task abort).
 
     ``seeds``: pred -> (pandas frame, Spark schema). Returns pred ->
     DataFrame for EVERY clique predicate (the multi-pred loop computes them
@@ -807,6 +824,31 @@ def driver_mixed(
     return out
 
 
+# in-task fan-out: the pivot tier gives each task 32 KiB of seed (an exact
+# row count is costed at ROW_BYTES a row); the slice tier gives each task
+# ~64 seed closures. The context asks these same functions whether a
+# fixpoint would run as ONE task, and then runs it on the driver instead.
+_PIVOT_TASK_BYTES = 32 * 1024
+ROW_BYTES = 64
+_SLICE_SEEDS = 64
+
+
+def pivot_tasks(spark: SparkSession, seed_bytes: int) -> int:
+    """Tasks the pivot tier schedules for ``seed_bytes`` of seed, capped at
+    the session's shuffle width."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-seed_bytes // _PIVOT_TASK_BYTES)))
+
+
+def seed_slices(spark: SparkSession, total: int) -> int:
+    """Tasks the seed-broadcast tier schedules for ``total`` seed rows of a
+    linear clique: ~64 seed closures per task amortize the per-task launch
+    + pandas fixpoint overhead, so tiny seed sets stop paying session-width
+    fan-out (63 seeds ran 32 two-seed tasks of fixed cost)."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-total // _SLICE_SEEDS)))
+
+
 def _seed_sized_partitions(spark: SparkSession, seed: DataFrame) -> int:
     """Pivot-partition count for one in-task fixpoint, sized from the
     seed's Catalyst byte estimate (driver-side stats, no job) — the same
@@ -825,8 +867,8 @@ def _seed_sized_partitions(spark: SparkSession, seed: DataFrame) -> int:
         known = getattr(seed, "_bdlog_known_rows", None)
         if known is None:
             return cap
-        b = known * 64
-    return max(1, min(cap, -(-b // (32 * 1024))))
+        b = known * ROW_BYTES
+    return pivot_tasks(spark, b)
 
 
 def local_seminaive_fixpoint(
@@ -840,10 +882,11 @@ def local_seminaive_fixpoint(
     track=None,
     growth=DEFAULT_GROWTH,
     pd_cache=None,
+    bc_cache=None,
 ) -> DataFrame:
     """One-job decomposable fixpoint: repartition seed on the pivot, run the
     whole PSN loop inside each partition."""
-    bc = _collect_statics(spark, statics, track, pd_cache)
+    bc = _collect_statics(spark, statics, track, pd_cache, bc_cache)
     n = num_partitions or _seed_sized_partitions(spark, seed)
     part = seed.repartition(n, *pivot_cols)
     rules = list(rules)
@@ -898,16 +941,10 @@ def seed_broadcast_seminaive(
     seeds_pd = {p: pdf for p, (pdf, _) in seeds.items()}
     out_schema = seeds[out_pred][1]
     total = sum(len(pdf) for pdf in seeds_pd.values())
-    # slice count sized to the (driver-resident, gated-small) seed count:
-    # ~64 seed closures per task amortize the per-task launch + pandas
-    # fixpoint overhead; tiny seed sets stop paying session-width fan-out
-    # (63 seeds ran 32 two-seed tasks of fixed cost). Callers that need a
-    # specific width (non-linear cliques: num_slices=1) are untouched.
-    n = num_slices or max(
-        1,
-        min(int(spark.conf.get("spark.sql.shuffle.partitions")), -(-total // 64)),
-    )
-    n = max(1, min(n, total))
+    # slice count sized to the (driver-resident, gated-small) seed count;
+    # callers that need a specific width (non-linear cliques:
+    # num_slices=1) are untouched
+    n = num_slices or seed_slices(spark, total)
     if bc is None:
         bc = broadcast_seed_statics(spark, seeds_pd, statics, track)
     rules_by_pred = {p: list(rs) for p, rs in rules_by_pred.items()}
@@ -1000,15 +1037,9 @@ def seed_broadcast_monotonic(
     tables with min/max yields the exact global fixpoint."""
     from pyspark.sql import functions as F
 
-    total = len(seed_pd)
-    # ~64 seed closures per slice (see seed_broadcast_seminaive): heavy
-    # per-seed fixpoints (all-pairs shapes) still hit the session cap,
-    # tiny seed sets stop paying session-width task fan-out
-    n = num_slices or max(
-        1,
-        min(int(spark.conf.get("spark.sql.shuffle.partitions")), -(-total // 64)),
-    )
-    n = max(1, min(n, total))
+    # ~64 seed closures per slice (seed_slices): heavy per-seed fixpoints
+    # (all-pairs shapes) still hit the session cap
+    n = num_slices or seed_slices(spark, len(seed_pd))
     bc = _track(
         spark.sparkContext.broadcast(
             (seed_pd, {k: _static_pd(v, pd_cache) for k, v in statics.items()})
@@ -1059,11 +1090,12 @@ def local_monotonic_fixpoint(
     track=None,
     growth=DEFAULT_GROWTH,
     pd_cache=None,
+    bc_cache=None,
 ) -> DataFrame:
     """One-job decomposable monotonic-aggregate fixpoint. ``seed_pre`` is the
     un-aggregated exit-rule contribution stream; aggregation happens in-task
     (groups never straddle partitions because pivot ⊆ group keys)."""
-    bc = _collect_statics(spark, statics, track, pd_cache)
+    bc = _collect_statics(spark, statics, track, pd_cache, bc_cache)
     # seed-sized pivot width (see _seed_sized_partitions): tiny
     # contribution streams stop fanning out to session-width tasks
     n = num_partitions or _seed_sized_partitions(spark, seed_pre)

@@ -454,3 +454,184 @@ def test_null_monotonic_local_matches_distributed(spark, lab, e):
         ((k, None if v == INF else v) for k, v in best.items()), key=str
     )
     assert local == want
+
+
+# ------------------------------------------------------- one-task rule
+# A set-semantics local fixpoint runs on the driver exactly when the
+# in-task tier would schedule ONE task for its seed: pivot mode sizes
+# 32 KiB of seed per task, slices ~64 seeds per task, non-linear cliques
+# always one. A bound goal's few-row seed therefore launches no fixpoint
+# job at all.
+
+TC = (
+    "database({arc(From:integer, To:integer)})."
+    "tc(A,B) <- arc(A,B)."
+    "tc(A,B) <- tc(A,C), arc(C,B)."
+)
+MUTUAL_SRC = (
+    "database({arc(From:integer, To:integer), src(N:integer)})."
+    "even(X) <- src(X)."
+    "odd(Y) <- even(X), arc(X,Y)."
+    "even(Y) <- odd(X), arc(X,Y)."
+)
+# two chains and a shortcut, so forward and reverse slices differ
+TREEISH = CHAIN + ["40,41", "41,42", "3,40", "42,7"]
+
+
+@pytest.mark.parametrize(
+    "prog,data,goal",
+    [
+        (TC, {"arc": TREEISH}, "tc(3,B)."),  # pivot mode, bound pivot
+        (TC, {"arc": TREEISH}, "tc(A,8)."),  # magic-set path
+        (MUTUAL_SRC, {"arc": CHAIN, "src": ["0", "5", "11"]}, "odd(X)."),
+    ],
+    ids=["tc_forward", "tc_reverse", "mutual_small_seed"],
+)
+def test_one_task_route_three_way_parity(spark, monkeypatch, prog, data, goal):
+    calls = _spy(monkeypatch, "driver_seminaive")
+    driver = _rows(spark, prog, data, goal)
+    assert calls and all(calls)  # every clique of the goal ran driver-side
+    in_task = _rows(spark, prog, data, goal, driver_local=False)
+    dist = _rows(spark, prog, data, goal, decomposable_local=False)
+    assert driver == in_task == dist and len(driver) > 0
+
+
+def test_pivot_seed_over_one_task_stays_in_task(spark, monkeypatch):
+    # tc(A,600) on a 600-arc chain demands every arc: a 600-row pivot seed
+    # is 600 * 64 B > 32 KiB, two pivot tasks, so the in-task tier serves
+    # the guarded clique (only the 1-row magic demand clique is driver-side)
+    drv = _spy(monkeypatch, "driver_seminaive")
+    task = _spy(monkeypatch, "local_seminaive_fixpoint")
+    ctx = BigDatalogContext(spark)
+    ctx.load_program(TC)
+    ctx.register_data("arc", [f"{i},{i + 1}" for i in range(600)])
+    got = sorted(r[0] for r in ctx.query("tc(A,600).").collect())
+    assert got == list(range(600))
+    assert drv == [True] and task == [True]
+
+
+def test_one_task_route_growth_abort_falls_back(spark, monkeypatch):
+    # tc(0,B) on the chain derives 30 rows from a 1-row seed: a factor-1,
+    # floor-8 budget aborts the driver loop, and the distributed loop
+    # answers
+    calls = _spy(monkeypatch, "driver_seminaive")
+    rows = _rows(
+        spark, TC, {"arc": CHAIN}, "tc(0,B).",
+        local_growth_factor=1, local_growth_floor=8,
+    )
+    assert rows == [(0, i) for i in range(1, 31)]
+    assert calls == [False]
+
+
+def test_bound_goal_runs_no_spark_task(spark):
+    """With the statics collected by a first goal, ctx.query("tc(c,B).")
+    itself schedules no Spark task: seed, loop and result lift all happen
+    on the driver (a job-free limit(0) dtype probe may register a job with
+    zero tasks). The chain is a Range projection, so Catalyst knows its
+    size exactly and the statics byte gate needs no probe job."""
+    sc = spark.sparkContext
+    ctx = BigDatalogContext(spark)
+    ctx.load_program(TC)
+    ctx.register(
+        "arc",
+        spark.range(30).selectExpr(
+            "cast(id as int) as a", "cast(id + 1 as int) as b"
+        ),
+    )
+    assert ctx.query("tc(2,B).").count() == 28
+    group = "bound-goal-task-count"
+    sc.setJobGroup(group, "tc(5,B)")
+    try:
+        df = ctx.query("tc(5,B).")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = 0
+    for jid in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            tasks += tracker.getStageInfo(sid).numTasks
+    assert tasks == 0
+    assert sorted(r[1] for r in df.collect()) == list(range(6, 31))
+
+
+def test_magic_goal_schema_probe_persists_nothing(spark):
+    # the local tiers build the step plan only for its widened schema; on
+    # the driver route that plan never runs, so no static may have been
+    # persisted or collected into a LocalRelation for it
+    ctx = BigDatalogContext(spark)
+    ctx.load_program(TC)
+    ctx.register_data("arc", TREEISH)
+    assert sorted(r[0] for r in ctx.query("tc(A,8).").collect()) == list(
+        range(0, 8)
+    ) + [40, 41, 42]
+    assert ctx._persisted_statics == {} and ctx._collected_statics == {}
+
+
+def test_statics_broadcast_built_once_per_program(spark):
+    # in-task pivot goals over the same statics share ONE broadcast; it is
+    # destroyed (and the memo emptied) when the program changes
+    ctx = BigDatalogContext(spark, EngineConfig(driver_local=False))
+    ctx.load_program(TC)
+    ctx.register_data("arc", CHAIN)
+    for c in (1, 2, 3):
+        got = sorted(r[1] for r in ctx.query(f"tc({c},B).").collect())
+        assert got == list(range(c + 1, 31))
+    assert len(ctx._statics_bc) == 1 and ctx._broadcasts == []
+    ((_, bc),) = ctx._statics_bc.values()
+    ctx.load_program("q(X) <- arc(X,Y).")
+    assert ctx._statics_bc == {}
+    assert not bc._jbroadcast.isValid()  # destroyed, not left to GC
+
+
+def _merge_monotonic_reference(table, cand, key_cols, value_col, func, cols):
+    """The two-merge form of local_eval._merge_monotonic_pd: an indicator
+    merge finds the improved groups, an anti-merge drops their stored rows."""
+    import pandas as pd
+
+    m = cand.merge(
+        table, on=key_cols, how="left", suffixes=("", "__old"), indicator=True
+    )
+    oldv, newv = m[value_col + "__old"], m[value_col]
+    chg = (newv < oldv) if func == "mmin" else (newv > oldv)
+    better = (
+        (m["_merge"] == "left_only")
+        | (oldv.isna() & newv.notna())
+        | chg.fillna(False).astype(bool)
+    )
+    improved = m.loc[better, cols].reset_index(drop=True)
+    if not len(improved):
+        return table, improved
+    anti = table.merge(improved[key_cols], on=key_cols, how="left", indicator=True)
+    kept = anti.loc[anti["_merge"] == "left_only", cols]
+    return pd.concat([kept, improved], ignore_index=True), improved
+
+
+def test_merge_monotonic_pd_matches_two_merge_reference():
+    """The presence-column merge returns the same table (row order
+    included) and the same improved rows as the two-merge form, over
+    random tables with NULL keys and NULL values on both sides."""
+    import numpy as np
+    import pandas as pd
+
+    from bigdatalog_spark.datalog.local_eval import _merge_monotonic_pd
+
+    rng = np.random.default_rng(7)
+
+    def frame():
+        keys = rng.choice(30, size=int(rng.integers(0, 30)), replace=False)
+        k = keys.astype(float)
+        k[rng.random(len(k)) < 0.1] = np.nan
+        v = rng.integers(0, 10, size=len(k)).astype(float)
+        v[rng.random(len(v)) < 0.3] = np.nan
+        return pd.DataFrame({"c0": k, "c1": v}).drop_duplicates("c0")
+
+    for _ in range(100):
+        table, cand = frame(), frame()
+        for func in ("mmin", "mmax"):
+            args = (table, cand, ["c0"], "c1", func, ["c0", "c1"])
+            got_t, got_i = _merge_monotonic_pd(*args)
+            want_t, want_i = _merge_monotonic_reference(*args)
+            pd.testing.assert_frame_equal(
+                got_t.reset_index(drop=True), want_t.reset_index(drop=True)
+            )
+            pd.testing.assert_frame_equal(got_i, want_i)

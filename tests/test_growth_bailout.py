@@ -67,10 +67,13 @@ def test_seed_broadcast_default_budget_stays_local(spark):
 def test_pivot_mode_bails_to_distributed(spark):
     """Pivot-partitioned TC over a 30-node path: closure is ~n²/2 rows
     from an n-row seed; a factor-2/floor-16 budget must trip in-task and
-    the distributed loop must still deliver the full closure."""
+    the distributed loop must still deliver the full closure. (A 30-row
+    pivot seed is one task, which the driver tier would take — off here
+    so the in-task pivot loop is the one that trips.)"""
     arcs = [f"{i},{i + 1}" for i in range(30)]
     strict = _ctx(
-        spark, TC, {"arc": arcs}, local_growth_factor=2, local_growth_floor=16
+        spark, TC, {"arc": arcs}, local_growth_factor=2, local_growth_floor=16,
+        driver_local=False,
     )
     rows = strict.query("tc(A,B).").collect()
     assert len(rows) == 31 * 30 // 2

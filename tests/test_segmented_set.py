@@ -148,3 +148,30 @@ def test_reset_releases_distributed_fixpoint_blocks(spark, program, goal, lines)
     assert set(jsc.getPersistentRDDs().keySet().toArray()) - before
     ctx.reset()
     assert not set(jsc.getPersistentRDDs().keySet().toArray()) - before
+
+
+def test_reregister_releases_distributed_results(spark):
+    """Re-registering a relation invalidates the memoized results AND
+    releases their checkpoint blocks: three rounds of register + a
+    forced-distributed query, then reset(), leave no persistent RDD."""
+    from bigdatalog_spark import BigDatalogContext
+    from bigdatalog_spark.datalog.context import EngineConfig
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    ctx = BigDatalogContext(
+        spark,
+        EngineConfig(
+            local_seed_max_rows=0, decomposable_local=False, driver_local=False
+        ),
+    )
+    ctx.load_program(
+        "database({arc(From:integer, To:integer)})."
+        "tc(A,B) <- arc(A,B)."
+        "tc(A,B) <- tc(A,C), arc(C,B)."
+    )
+    for n in (8, 10, 12):
+        ctx.register_data("arc", [f"{i},{i + 1}" for i in range(n)])
+        assert ctx.query("tc(A,B).").count() == (n + 1) * n // 2
+    ctx.reset()
+    assert not set(jsc.getPersistentRDDs().keySet().toArray()) - before
