@@ -219,6 +219,11 @@ class BigDatalogContext:
         # (raw Catalyst stats, falling back to ONE bounded probe; -1 = too
         # big / unknown -> no hint)
         self._static_bcast_bytes: dict[int, int] = {}
+        # (id(relation), byte limit) -> (relation, _estimated_bytes result)
+        # for registered relations whose stats are unknown (register_data
+        # frames are RDD-backed): their bounded probe runs once per
+        # registration, not once per clique of every goal
+        self._relation_bytes: dict[tuple, tuple] = {}
         # id(jdf) -> LocalRelation copy of a tiny static (see
         # EngineConfig.local_static_max_bytes); False = probed over the
         # gate, don't re-probe
@@ -268,6 +273,7 @@ class BigDatalogContext:
         )
         self._cache.clear()
         self._clear_bound_memo()
+        self._relation_bytes.clear()
         for _, bc in self._statics_bc.values():
             try:
                 bc.destroy()
@@ -1073,6 +1079,7 @@ class BigDatalogContext:
         sub._persisted_statics = self._persisted_statics
         sub._shuffled_statics = self._shuffled_statics
         sub._static_bcast_bytes = self._static_bcast_bytes
+        sub._relation_bytes = self._relation_bytes
         sub._collected_statics = self._collected_statics
         sub._broadcasts = self._broadcasts
         sub._statics_pd = self._statics_pd
@@ -1282,6 +1289,7 @@ class BigDatalogContext:
         sub._persisted_statics = self._persisted_statics
         sub._shuffled_statics = self._shuffled_statics
         sub._static_bcast_bytes = self._static_bcast_bytes
+        sub._relation_bytes = self._relation_bytes
         sub._collected_statics = self._collected_statics
         sub._broadcasts = self._broadcasts
         sub._statics_pd = self._statics_pd
@@ -1793,7 +1801,9 @@ class BigDatalogContext:
         OVER-estimated (join/union stats multiply children — a derived
         40k-row graph can report terabytes and would wrongly lose its local
         fast path). None = probed over budget. Driver-tier results carry
-        their exact row count (local_eval._driver_result_df) — no probe."""
+        their exact row count (local_eval._driver_result_df) — no probe.
+        A registered relation's probe is memoized until it is re-registered
+        (_relation_bytes)."""
         known = getattr(df, "_bdlog_known_rows", None)
         if known is not None:
             row_bytes = 8 + sum(
@@ -1810,15 +1820,20 @@ class BigDatalogContext:
             size = -1
         if 0 <= size <= limit:
             return size
+        memo_key = (id(df), limit)
+        hit = self._relation_bytes.get(memo_key)
+        if hit is not None and hit[0] is df:
+            return hit[1]
         row_bytes = 8 + sum(
             self._TYPE_BYTES.get(f.dataType.simpleString(), 24)
             for f in df.schema.fields
         )
         max_rows = limit // row_bytes
         n = df.limit(max_rows + 1).count()
-        if n > max_rows:
-            return None
-        return n * row_bytes
+        out = None if n > max_rows else n * row_bytes
+        if any(df is r for r in self._relations.values()):
+            self._relation_bytes[memo_key] = (df, out)
+        return out
 
     def _local_statics(self, static_preds: list) -> dict | None:
         """Resolve the recursion's static relations and size-gate them for

@@ -497,14 +497,15 @@ def test_one_task_route_three_way_parity(spark, monkeypatch, prog, data, goal):
 
 
 def test_pivot_seed_over_one_task_stays_in_task(spark, monkeypatch):
-    # tc(A,600) on a 600-arc chain demands every arc: a 600-row pivot seed
-    # is 600 * 64 B > 32 KiB, two pivot tasks, so the in-task tier serves
-    # the guarded clique (only the 1-row magic demand clique is driver-side)
+    # tc(A,600) on a 600-arc star (i -> 600) demands every arc: a 600-row
+    # pivot seed is 600 * 64 B > 32 KiB, two pivot tasks, so the in-task
+    # tier serves the guarded clique (only the 1-row magic demand clique is
+    # driver-side). A star, not a chain: the same seed in two iterations
     drv = _spy(monkeypatch, "driver_seminaive")
     task = _spy(monkeypatch, "local_seminaive_fixpoint")
     ctx = BigDatalogContext(spark)
     ctx.load_program(TC)
-    ctx.register_data("arc", [f"{i},{i + 1}" for i in range(600)])
+    ctx.register_data("arc", [f"{i},600" for i in range(600)])
     got = sorted(r[0] for r in ctx.query("tc(A,600).").collect())
     assert got == list(range(600))
     assert drv == [True] and task == [True]

@@ -244,10 +244,14 @@ def test_nonlinear_segment_joins_single_exchange_per_iteration(
     per_iter = [len(_exchanges(p)) for p in capture_anti_plans]
     assert len(per_iter) >= 3
     assert max(per_iter) <= 1, f"exchanges/iter: {per_iter}"
-    # reference closure
+    # reference closure, joined through a successor index (a pairwise scan
+    # of tc x tc is quadratic in the closure: minutes on this graph)
     tc = set(edges)
     while True:
-        new = {(a, d) for (a, b) in tc for (c, d) in tc if b == c} - tc
+        succ = {}
+        for c, d in tc:
+            succ.setdefault(c, set()).add(d)
+        new = {(a, d) for (a, b) in tc for d in succ.get(b, ())} - tc
         if not new:
             break
         tc |= new
