@@ -57,6 +57,7 @@ from .local_eval import (
     driver_seminaive,
     local_monotonic_fixpoint,
     local_seminaive_fixpoint,
+    pivot_one_task_rows,
     pivot_tasks,
     schema_pd_dtypes,
     seed_broadcast_mixed,
@@ -215,15 +216,11 @@ class BigDatalogContext:
         # as _cache (cleared on load_program/reset).
         self._bound_memo: dict[tuple, DataFrame] = {}
         self._persisted_statics: dict[int, DataFrame] = {}
-        # id(jdf) -> memoized broadcast-size decision for _maybe_broadcast
-        # (raw Catalyst stats, falling back to ONE bounded probe; -1 = too
-        # big / unknown -> no hint)
-        self._static_bcast_bytes: dict[int, int] = {}
-        # (id(relation), byte limit) -> (relation, _estimated_bytes result)
-        # for registered relations whose stats are unknown (register_data
-        # frames are RDD-backed): their bounded probe runs once per
-        # registration, not once per clique of every goal
-        self._relation_bytes: dict[tuple, tuple] = {}
+        # (id(df), byte limit) -> (df, _estimated_bytes result) for frames
+        # that outlive a goal (registered relations, persisted statics):
+        # a bounded row probe runs once per registration, not once per
+        # clique of every goal or per fixpoint iteration
+        self._size_memo: dict[tuple, tuple] = {}
         # id(jdf) -> LocalRelation copy of a tiny static (see
         # EngineConfig.local_static_max_bytes); False = probed over the
         # gate, don't re-probe
@@ -251,7 +248,13 @@ class BigDatalogContext:
 
     # ------------------------------------------------------------- loading
     def load_program(self, text: str) -> "BigDatalogContext":
-        """Parse a DeAL program (database({...}). + rules)."""
+        """Parse a DeAL program (database({...}). + rules) and add it to
+        the loaded one.
+
+        Loading invalidates every memoized result and releases its
+        checkpoint blocks (see _release_results): a frame query() returned
+        before this call stops being re-executable — collect it, or
+        register() it, first."""
         prog = parse_program(text)
         self.program.schemas.update(prog.schemas)
         self.program.rules.extend(prog.rules)
@@ -273,7 +276,7 @@ class BigDatalogContext:
         )
         self._cache.clear()
         self._clear_bound_memo()
-        self._relation_bytes.clear()
+        self._size_memo.clear()
         for _, bc in self._statics_bc.values():
             try:
                 bc.destroy()
@@ -307,7 +310,10 @@ class BigDatalogContext:
         computed against the PREVIOUS frame and would silently serve
         stale rows (ADVICE r09 — before the r9 memo, bound goals re-read
         ``_relations`` at compute time, so the memo alone would have been
-        a behavior regression for re-register-without-load_program)."""
+        a behavior regression for re-register-without-load_program).
+        Their checkpoint blocks are released too, so a frame query()
+        returned before this call stops being re-executable — except
+        ``df`` itself: registering a held result keeps its blocks."""
         if name in self.program.schemas:
             decl = self.program.schemas[name]
             if len(df.columns) != len(decl.columns):
@@ -368,7 +374,6 @@ class BigDatalogContext:
                 pass
         self._broadcasts.clear()
         self._statics_pd.clear()
-        self._static_bcast_bytes.clear()
         self._collected_statics.clear()  # LocalRelations: driver/JVM memory
         self._analyzed = None
 
@@ -1078,8 +1083,7 @@ class BigDatalogContext:
         sub._cache = self._cache
         sub._persisted_statics = self._persisted_statics
         sub._shuffled_statics = self._shuffled_statics
-        sub._static_bcast_bytes = self._static_bcast_bytes
-        sub._relation_bytes = self._relation_bytes
+        sub._size_memo = self._size_memo
         sub._collected_statics = self._collected_statics
         sub._broadcasts = self._broadcasts
         sub._statics_pd = self._statics_pd
@@ -1288,8 +1292,7 @@ class BigDatalogContext:
         sub._cache = self._cache
         sub._persisted_statics = self._persisted_statics
         sub._shuffled_statics = self._shuffled_statics
-        sub._static_bcast_bytes = self._static_bcast_bytes
-        sub._relation_bytes = self._relation_bytes
+        sub._size_memo = self._size_memo
         sub._collected_statics = self._collected_statics
         sub._broadcasts = self._broadcasts
         sub._statics_pd = self._statics_pd
@@ -1554,29 +1557,17 @@ class BigDatalogContext:
         df = self._persisted_statics[key]
         if not self.config.broadcast_static_side:
             return df
-        size = self._static_bcast_bytes.get(key)
-        if size is None:
-            try:
-                size = int(
-                    df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-                )
-            except Exception:
-                size = -1
-            if not (0 <= size <= self.config.broadcast_max_bytes):
-                # Pre-materialization garbage stats (RDD-backed registers
-                # report Long.MaxValue): bounded probe once, memoized. The
-                # hint must AGREE with _make_static_shuffle's probe-based
-                # decision — auto-broadcast (ON in the loop, see _aqe_off)
-                # cannot size such a static, so unhinted it would degrade
-                # to an UN-pre-shuffled sort-merge join re-exchanging the
-                # candidate chain every iteration (and breaking the pivot
-                # store's zero-exchange property).
-                est = self._estimated_bytes(df, self.config.broadcast_max_bytes)
-                size = est if est is not None else -1
-            self._static_bcast_bytes[key] = size
-        if 0 <= size <= self.config.broadcast_max_bytes:
+        # the same bounded-probe estimate as _make_static_shuffle (memoized
+        # for persisted statics): the hint must AGREE with its decision —
+        # auto-broadcast (ON in the loop, see _aqe_off) cannot size an
+        # RDD-backed static (Long.MaxValue stats), so unhinted it would
+        # degrade to an UN-pre-shuffled sort-merge join re-exchanging the
+        # candidate chain every iteration (and breaking the pivot store's
+        # zero-exchange property)
+        size = self._estimated_bytes(df, self.config.broadcast_max_bytes)
+        if size is not None:
             gate = self.config.local_static_max_bytes
-            if gate > 0 and 0 <= size <= gate:
+            if gate > 0 and size <= gate:
                 local = self._collect_local_static(key, df)
                 if local is not None:
                     return F.broadcast(local)
@@ -1802,14 +1793,29 @@ class BigDatalogContext:
         40k-row graph can report terabytes and would wrongly lose its local
         fast path). None = probed over budget. Driver-tier results carry
         their exact row count (local_eval._driver_result_df) — no probe.
-        A registered relation's probe is memoized until it is re-registered
-        (_relation_bytes)."""
+        The estimate of a frame that outlives the goal — a registered
+        relation or a persisted static — is memoized (_size_memo) until
+        the next register/load_program/reset: its probe runs once, and
+        every caller sees the same figure even after persisting the frame
+        changes its Catalyst stats."""
+        memo_key = (id(df), limit)
+        hit = self._size_memo.get(memo_key)
+        if hit is not None and hit[0] is df:
+            return hit[1]
+        out = self._probe_bytes(df, limit)
+        if self._persisted_statics.get(id(df._jdf)) is df or any(
+            df is r for r in self._relations.values()
+        ):
+            self._size_memo[memo_key] = (df, out)
+        return out
+
+    def _probe_bytes(self, df: DataFrame, limit: int) -> int | None:
+        row_bytes = 8 + sum(
+            self._TYPE_BYTES.get(f.dataType.simpleString(), 24)
+            for f in df.schema.fields
+        )
         known = getattr(df, "_bdlog_known_rows", None)
         if known is not None:
-            row_bytes = 8 + sum(
-                self._TYPE_BYTES.get(f.dataType.simpleString(), 24)
-                for f in df.schema.fields
-            )
             size = known * row_bytes
             return size if size <= limit else None
         try:
@@ -1820,20 +1826,9 @@ class BigDatalogContext:
             size = -1
         if 0 <= size <= limit:
             return size
-        memo_key = (id(df), limit)
-        hit = self._relation_bytes.get(memo_key)
-        if hit is not None and hit[0] is df:
-            return hit[1]
-        row_bytes = 8 + sum(
-            self._TYPE_BYTES.get(f.dataType.simpleString(), 24)
-            for f in df.schema.fields
-        )
         max_rows = limit // row_bytes
         n = df.limit(max_rows + 1).count()
-        out = None if n > max_rows else n * row_bytes
-        if any(df is r for r in self._relations.values()):
-            self._relation_bytes[memo_key] = (df, out)
-        return out
+        return None if n > max_rows else n * row_bytes
 
     def _local_statics(self, static_preds: list) -> dict | None:
         """Resolve the recursion's static relations and size-gate them for
@@ -1920,11 +1915,11 @@ class BigDatalogContext:
         plain: _maybe_broadcast would persist each static and collect the
         tiny ones into LocalRelations — one job per static for a plan that
         is thrown away (every magic-set goal collected its demand set)."""
-        self._plain_statics = True
+        prev, self._plain_statics = self._plain_statics, True
         try:
             return step(*args)
         finally:
-            self._plain_statics = False
+            self._plain_statics = prev
 
     def _local_seed_pdf(self, rules, exit_df, seed, max_rows, **exit_kw):
         """A local tier's seed as pandas: pandas evaluation of the exit
@@ -2013,9 +2008,13 @@ class BigDatalogContext:
             ).get(pred)
             seed = _widen_seed(exit_df.distinct(), probe)
             if self.config.driver_local:
+                # fetch no more rows than already make two tasks
+                one_task = pivot_one_task_rows(self.spark)
+                max_rows = self.config.driver_seed_max_rows
+                if one_task is not None:
+                    max_rows = min(max_rows, one_task)
                 pdf = self._local_seed_pdf(
-                    clique.exit_rules[pred], exit_df, seed,
-                    self.config.driver_seed_max_rows,
+                    clique.exit_rules[pred], exit_df, seed, max_rows,
                     bound=(seed_filter or {}).get(pred),
                 )
                 tasks = pivot_tasks(self.spark, len(pdf) * ROW_BYTES)

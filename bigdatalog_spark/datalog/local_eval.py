@@ -626,25 +626,22 @@ def _static_pd(df, pd_cache=None):
     return hit[1]
 
 
-def _collect_statics(spark: SparkSession, statics: dict, track=None,
-                     pd_cache=None, bc_cache=None):
+def _collect_statics(spark: SparkSession, statics: dict, bc_cache: dict,
+                     pd_cache=None):
     """toPandas each static relation once and ship the dict as ONE broadcast
     variable (torrent-distributed, like the reference's per-iteration
     broadcast join sides — but shipped a single time for the whole loop).
-    With ``bc_cache`` (the context's program-lifetime dict, destroyed on
-    reset/load_program/register) the broadcast is memoized per statics set:
-    every in-task goal over the same statics reuses it instead of pickling
-    and shipping the same dict again. Entries pin the frames so a recycled
-    id() can never alias a different plan. Without a memo the broadcast
-    goes on ``track`` (destroyed on reset)."""
+    The broadcast is memoized per statics set in ``bc_cache`` (the
+    context's program-lifetime dict, destroyed on reset/load_program/
+    register): every in-task goal over the same statics reuses it instead
+    of pickling and shipping the same dict again. Entries pin the frames
+    so a recycled id() can never alias a different plan."""
     key = tuple(sorted((name, id(df)) for name, df in statics.items()))
-    hit = bc_cache.get(key) if bc_cache is not None else None
+    hit = bc_cache.get(key)
     if hit is not None:
         return hit[1]
     statics_pd = {name: _static_pd(df, pd_cache) for name, df in statics.items()}
     bc = spark.sparkContext.broadcast(statics_pd)
-    if bc_cache is None:
-        return _track(bc, track)
     bc_cache[key] = (tuple(statics.values()), bc)
     return bc
 
@@ -840,6 +837,14 @@ def pivot_tasks(spark: SparkSession, seed_bytes: int) -> int:
     return max(1, min(cap, -(-seed_bytes // _PIVOT_TASK_BYTES)))
 
 
+def pivot_one_task_rows(spark: SparkSession) -> int | None:
+    """Most seed rows pivot_tasks still runs in ONE task; None when every
+    row count does (a one-partition session)."""
+    if int(spark.conf.get("spark.sql.shuffle.partitions")) <= 1:
+        return None
+    return _PIVOT_TASK_BYTES // ROW_BYTES
+
+
 def seed_slices(spark: SparkSession, total: int) -> int:
     """Tasks the seed-broadcast tier schedules for ``total`` seed rows of a
     linear clique: ~64 seed closures per task amortize the per-task launch
@@ -878,15 +883,14 @@ def local_seminaive_fixpoint(
     clique_preds,
     statics: dict,
     pivot_cols: list,
+    bc_cache: dict,
     num_partitions: int | None = None,
-    track=None,
     growth=DEFAULT_GROWTH,
     pd_cache=None,
-    bc_cache=None,
 ) -> DataFrame:
     """One-job decomposable fixpoint: repartition seed on the pivot, run the
     whole PSN loop inside each partition."""
-    bc = _collect_statics(spark, statics, track, pd_cache, bc_cache)
+    bc = _collect_statics(spark, statics, bc_cache, pd_cache)
     n = num_partitions or _seed_sized_partitions(spark, seed)
     part = seed.repartition(n, *pivot_cols)
     rules = list(rules)
@@ -1086,16 +1090,15 @@ def local_monotonic_fixpoint(
     key_cols: list,
     value_col: str,
     func: str,
+    bc_cache: dict,
     num_partitions: int | None = None,
-    track=None,
     growth=DEFAULT_GROWTH,
     pd_cache=None,
-    bc_cache=None,
 ) -> DataFrame:
     """One-job decomposable monotonic-aggregate fixpoint. ``seed_pre`` is the
     un-aggregated exit-rule contribution stream; aggregation happens in-task
     (groups never straddle partitions because pivot ⊆ group keys)."""
-    bc = _collect_statics(spark, statics, track, pd_cache, bc_cache)
+    bc = _collect_statics(spark, statics, bc_cache, pd_cache)
     # seed-sized pivot width (see _seed_sized_partitions): tiny
     # contribution streams stop fanning out to session-width tasks
     n = num_partitions or _seed_sized_partitions(spark, seed_pre)

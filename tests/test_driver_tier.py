@@ -511,6 +511,30 @@ def test_pivot_seed_over_one_task_stays_in_task(spark, monkeypatch):
     assert drv == [True] and task == [True]
 
 
+def test_pivot_seed_fetch_stops_at_two_tasks(spark, monkeypatch):
+    # an exit the pandas evaluator cannot take is fetched; the fetch stops
+    # at 513 rows, the first count that makes two pivot tasks (32 KiB at
+    # 64 B a row), instead of driver_seed_max_rows + 1
+    task = _spy(monkeypatch, "local_seminaive_fixpoint")
+    monkeypatch.setattr(
+        BigDatalogContext, "_driver_exit_pdf", lambda self, *a, **k: None
+    )
+    fetched = []
+    orig = BigDatalogContext._local_seed_pdf
+
+    def record(self, rules, exit_df, seed, max_rows, **kw):
+        pdf = orig(self, rules, exit_df, seed, max_rows, **kw)
+        fetched.append((max_rows, len(pdf)))
+        return pdf
+
+    monkeypatch.setattr(BigDatalogContext, "_local_seed_pdf", record)
+    ctx = BigDatalogContext(spark)
+    ctx.load_program(TC)
+    ctx.register_data("arc", [f"{i},600" for i in range(600)])
+    assert ctx.query("tc(A,B).").count() == 600
+    assert fetched == [(512, 513)] and task == [True]
+
+
 def test_one_task_route_growth_abort_falls_back(spark, monkeypatch):
     # tc(0,B) on the chain derives 30 rows from a 1-row seed: a factor-1,
     # floor-8 budget aborts the driver loop, and the distributed loop
@@ -566,6 +590,23 @@ def test_magic_goal_schema_probe_persists_nothing(spark):
         range(0, 8)
     ) + [40, 41, 42]
     assert ctx._persisted_statics == {} and ctx._collected_statics == {}
+
+
+def test_schema_probe_nesting_keeps_outer_state(spark):
+    # an inner probe must hand the outer one back its plain-statics mode,
+    # not switch persistence and broadcast hints back on mid-plan
+    ctx = BigDatalogContext(spark)
+    seen = []
+
+    def inner():
+        seen.append(ctx._plain_statics)
+
+    def outer():
+        ctx._schema_probe(inner)
+        seen.append(ctx._plain_statics)
+
+    ctx._schema_probe(outer)
+    assert seen == [True, True] and ctx._plain_statics is False
 
 
 def test_statics_broadcast_built_once_per_program(spark):

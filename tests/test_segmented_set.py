@@ -175,3 +175,38 @@ def test_reregister_releases_distributed_results(spark):
         assert ctx.query("tc(A,B).").count() == (n + 1) * n // 2
     ctx.reset()
     assert not set(jsc.getPersistentRDDs().keySet().toArray()) - before
+
+
+def test_register_and_load_program_invalidate_held_results(spark):
+    """A result query() returned stops being re-executable after the next
+    register()/load_program() (its checkpoint blocks are released), unless
+    it was register()ed itself: a registered result keeps its blocks
+    through later invalidations."""
+    from bigdatalog_spark import BigDatalogContext
+    from bigdatalog_spark.datalog.context import EngineConfig
+
+    ctx = BigDatalogContext(
+        spark,
+        EngineConfig(
+            local_seed_max_rows=0, decomposable_local=False, driver_local=False
+        ),
+    )
+    ctx.load_program(
+        "database({arc(From:integer, To:integer)})."
+        "tc(A,B) <- arc(A,B)."
+        "tc(A,B) <- tc(A,C), arc(C,B)."
+    )
+    ctx.register_data("arc", [f"{i},{i + 1}" for i in range(10)])
+    kept = ctx.query("tc(A,B).")
+    assert kept.count() == 55
+    ctx.register("snapshot", kept)
+    ctx.load_program("q(X) <- arc(X,Y).")
+    assert kept.count() == 55  # registered: blocks kept
+
+    dropped = ctx.query("tc(A,B).")
+    assert dropped.count() == 55
+    ctx.load_program("r(X) <- arc(Y,X).")
+    with pytest.raises(Exception, match="(?i)checkpoint|block"):
+        dropped.collect()
+    assert kept.count() == 55
+    ctx.reset()
